@@ -1,8 +1,15 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
+Usage: python bench.py [KEY ...]
+
+With no KEY it runs the full set: every HEADLINE key, then
+``ivf_index_build`` and ``stream_votes_pipeline``. Naming keys from that
+set runs only those, in the same order and with the same record format.
+
+Prints two JSON lines: the full record
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+   "queries": {name: sec, ...}, "construct": ..., "execute": ..., ...}
+then a compact summary sized to fit a 2000-char output tail.
 
 Each query is forced end-to-end with the noop sink (computes every
 output column, writes nothing) so timings measure the real plan, not a
@@ -18,10 +25,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import SparkSession
-
 import realtimevotingdataengineer_spark.operators  # noqa: F401
 from realtimevotingdataengineer_spark.registry import QUERIES
+from realtimevotingdataengineer_spark.session import get_spark
 from realtimevotingdataengineer_spark.sources.tables import Tables
 
 #: The headline set: the reference's core tallies + the fact-scale
@@ -50,8 +56,7 @@ HEADLINE = [
     "corpus_prune_semdedup",
     "events_anomaly_zscore",
     # round-4 additions: banded-hamming near-dup, bucket-local kNN graph,
-    # HLL calibration — one per new family (sim_knn_graph moved to
-    # RETIRING_R12 in round 11 — its scale twin below is the tracked key)
+    # HLL calibration — one per new family
     "dedup_simhash_hamming",
     "agg_approx_distinct",
     # round-5 additions: the BLAS kNN kernel (vs. the codegen plan above),
@@ -62,8 +67,7 @@ HEADLINE = [
     "dedup_fuzzy_edit",
     "pipeline_export_corpus",
     # late round-5 families: frequent itemsets, exact-bitmap rolling
-    # distincts, incremental dedup (sim_doc_topk_hashed moved to
-    # RETIRING_R12 in round 11 — its SRP twin below is the tracked key)
+    # distincts, incremental dedup
     "lineitem_market_basket",
     "events_rolling_wau_bitmap",
     "dedup_incremental_minhash",
@@ -120,15 +124,6 @@ HEADLINE = [
     "events_value_equidepth_approx",
 ]
 
-#: Emptied in round 12 (round-11 verdict ask #2): sim_knn_graph and
-#: sim_doc_topk_hashed left the bench — BENCH_r11 recorded both subsets
-#: side by side, so r12-vs-r11 drift comparisons use the common keys
-#: (tools/bench_drift.py). One exact-baseline representative stays
-#: permanently (sim_bruteforce_topk, in HEADLINE above); the retired
-#: keys' scale twins (sim_knn_graph_arrow, sim_doc_topk_hashed_srp)
-#: remain measured. PERF.md documents the composition.
-RETIRING_R12: list = []
-
 #: Round-13 variance policy (PERF.md "export-corpus variance,
 #: attributed"): the multi-stage export capstones' session-COLD first
 #: run costs up to ~4x their warm number (classload/codegen + cold
@@ -138,6 +133,99 @@ RETIRING_R12: list = []
 #: runs instead of one, so a single cold-straggler rep can't set the
 #: recorded number.
 EXTRA_REP = {"pipeline_export_corpus", "pipeline_export_corpus_incremental"}
+
+#: Bench entries that are not registry keys, run after the HEADLINE keys.
+SECTIONS = ["ivf_index_build", "stream_votes_pipeline"]
+
+
+def bench_session(app: str = "bench", extra_conf: dict | None = None):
+    """The bench's SparkSession: ``session.BATCH_CONF`` plus one shuffle
+    partition per core (``SPARK_GRAFT_CPUS``, default 32), small split
+    sizes, no UI and a ``SPARK_GRAFT_DRIVER_MEM`` (default 16g) heap.
+    Tools that must time or explain exactly what the bench runs build
+    their session here; ``extra_conf`` overrides single entries."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    conf = {
+        "spark.app.name": app,
+        "spark.sql.shuffle.partitions": cpus,
+        # split small local files across cores (a cluster gets this from
+        # having many files; local single-file tables need the nudge)
+        "spark.sql.files.maxPartitionBytes": "4m",
+        "spark.sql.files.openCostInBytes": "131072",
+        "spark.ui.showConsoleProgress": "false",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    }
+    spark = get_spark(f"local[{cpus}]", {**conf, **(extra_conf or {})})
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def bench_tables(spark, sf_dir: str) -> Tables:
+    """Bind the tables at ``sf_dir`` and warm the JVM/codegen path once
+    so per-query numbers measure the plan, not first-call classloading."""
+    t = Tables(spark, sf_dir)
+    QUERIES["agg_count_rows"](t).write.mode("overwrite").format("noop").save()
+    return t
+
+
+def bench_reps(name: str) -> int:
+    """Best-of-2 (the first run absorbs codegen/JIT noise); the export
+    capstones get best-of-3 — see EXTRA_REP."""
+    return 3 if name in EXTRA_REP else 2
+
+
+def time_keys(
+    t: Tables, names: list[str], reps: int | None = None
+) -> tuple[dict[str, list[tuple[float, float]]], dict[str, str]]:
+    """Run each registry key ``reps`` times (default ``bench_reps``) into
+    the noop sink and time every rep.
+
+    Returns ``(runs, errors)``: ``runs[name]`` lists one
+    ``(construct_s, execute_s)`` pair per rep, and ``errors[name]`` holds
+    the ``repr`` of the exception that stopped a key. A failing key
+    never stops the keys after it. Jobs carry the description
+    ``"<key>: construct"`` or ``"<key>: execute"``."""
+    spark = t.spark
+    sc = spark.sparkContext
+    runs: dict[str, list[tuple[float, float]]] = {}
+    errors: dict[str, str] = {}
+    try:
+        for name in names:
+            parts = []
+            try:
+                for _ in range(reps or bench_reps(name)):
+                    spark.catalog.clearCache()
+                    # construction INSIDE the timer: operators that eagerly
+                    # localCheckpoint shared intermediates (minhash shingles,
+                    # IVF codebooks) do that work at build time, and it must
+                    # count — timing only the final noop write would hide it.
+                    # Construct and execute are reported SEPARATELY so a
+                    # change in what happens at build time (eager
+                    # materialization, index IO) can't masquerade as a plan
+                    # regression.
+                    sc.setJobDescription(f"{name}: construct")
+                    t0 = time.perf_counter()
+                    df = QUERIES[name](t)
+                    t1 = time.perf_counter()
+                    sc.setJobDescription(f"{name}: execute")
+                    df.write.mode("overwrite").format("noop").save()
+                    parts.append((t1 - t0, time.perf_counter() - t1))
+            except Exception as ex:
+                # One bad query must not zero out the other measurements
+                # (round 3 lost 21 good timings to a single
+                # AnalysisException): record the error and keep going.
+                errors[name] = repr(ex)
+                print(f"bench query {name} failed: {ex!r}", file=sys.stderr)
+                continue
+            runs[name] = parts
+            # settle the JVM between queries: unpersisted cache blocks are
+            # reclaimed lazily and their GC otherwise lands in the next
+            # query's measurement
+            sc._jvm.System.gc()  # noqa: SLF001
+    finally:
+        sc.setJobDescription(None)
+    return runs, errors
 
 
 def bench_ivf_index_build(t: Tables) -> float:
@@ -219,96 +307,52 @@ def bench_stream(spark) -> float:
         shutil.rmtree(d, ignore_errors=True)
 
 
-def main() -> None:
+def main(keys: list[str]) -> None:
+    unknown = sorted(set(keys) - set(HEADLINE) - set(SECTIONS))
+    if unknown:
+        sys.exit(
+            f"bench.py: unknown key(s) {unknown}; "
+            f"choose from HEADLINE, {', '.join(SECTIONS)}"
+        )
+    selected = [k for k in HEADLINE + SECTIONS if not keys or k in keys]
     load_start = list(os.getloadavg())
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # split small local files across cores (a cluster gets this from
-        # having many files; local single-file tables need the nudge)
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.sql.files.openCostInBytes", "131072")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    t = Tables(spark, sf_dir)
+    spark = bench_session()
+    t = bench_tables(spark, sf_dir)
 
-    # Warm the JVM/codegen path once so per-query numbers measure the
-    # plan, not first-call classloading.
-    QUERIES["agg_count_rows"](t).write.mode("overwrite").format("noop").save()
-
+    queries = [k for k in selected if k not in SECTIONS]
+    # rep count is recorded per key (round-13 advice: the EXTRA_REP
+    # asymmetry must be visible in the record itself so cross-round
+    # comparisons of a best-of-3 key vs an older best-of-2 figure
+    # are adjudicated with the methodology in-band, not from memory)
+    reps = {name: bench_reps(name) for name in queries}
+    runs, errors = time_keys(t, queries)
     timings: dict[str, float] = {}
     construct: dict[str, float] = {}
     execute: dict[str, float] = {}
-    reps: dict[str, int] = {}
-    errors: dict[str, str] = {}
-    for name in HEADLINE + RETIRING_R12:
-        best = float("inf")
-        best_parts = (0.0, 0.0)
-        # rep count is recorded per key (round-13 advice: the EXTRA_REP
-        # asymmetry must be visible in the record itself so cross-round
-        # comparisons of a best-of-3 key vs an older best-of-2 figure
-        # are adjudicated with the methodology in-band, not from memory)
-        reps[name] = 3 if name in EXTRA_REP else 2
-        try:
-            # best-of-2 (first run absorbs codegen/JIT noise); the
-            # export capstones get best-of-3 — see EXTRA_REP
-            for _ in range(reps[name]):
-                spark.catalog.clearCache()
-                # construction INSIDE the timer: operators that eagerly
-                # localCheckpoint shared intermediates (minhash shingles,
-                # IVF codebooks) do that work at build time, and it must
-                # count — timing only the final noop write would hide it.
-                # Construct and execute are reported SEPARATELY so a change
-                # in what happens at build time (eager materialization,
-                # index IO) can't masquerade as a plan regression.
-                t0 = time.perf_counter()
-                df = QUERIES[name](t)
-                t1 = time.perf_counter()
-                df.write.mode("overwrite").format("noop").save()
-                t2 = time.perf_counter()
-                if t2 - t0 < best:
-                    best = t2 - t0
-                    best_parts = (t1 - t0, t2 - t1)
-        except Exception as ex:
-            # One bad query must not zero out the other measurements
-            # (round 3 lost 21 good timings to a single AnalysisException):
-            # record the error, keep going, exit nonzero at the end.
-            errors[name] = repr(ex)
-            print(f"bench query {name} failed: {ex!r}", file=sys.stderr)
-            continue
-        timings[name] = round(best, 3)
-        construct[name] = round(best_parts[0], 3)
-        execute[name] = round(best_parts[1], 3)
-        # settle the JVM between queries: unpersisted cache blocks are
-        # reclaimed lazily and their GC otherwise lands in the next
-        # query's measurement
-        spark.sparkContext._jvm.System.gc()  # noqa: SLF001
+    for name, parts in runs.items():
+        c, e = min(parts, key=sum)
+        timings[name] = round(c + e, 3)
+        construct[name] = round(c, 3)
+        execute[name] = round(e, 3)
     spark.catalog.clearCache()
 
-    try:
-        # ADDED round 16 (never removes/renames an existing entry): the
-        # fresh-build cost of the IVF inverted list sim_ivf_topk reads
-        # as a persisted table — see bench_ivf_index_build's docstring.
-        timings["ivf_index_build"] = round(bench_ivf_index_build(t), 3)
-    except Exception as ex:
-        errors["ivf_index_build"] = repr(ex)
-        print(f"ivf index build bench failed: {ex!r}", file=sys.stderr)
+    if "ivf_index_build" in selected:
+        try:
+            # ADDED round 16 (never removes/renames an existing entry): the
+            # fresh-build cost of the IVF inverted list sim_ivf_topk reads
+            # as a persisted table — see bench_ivf_index_build's docstring.
+            timings["ivf_index_build"] = round(bench_ivf_index_build(t), 3)
+        except Exception as ex:
+            errors["ivf_index_build"] = repr(ex)
+            print(f"ivf index build bench failed: {ex!r}", file=sys.stderr)
 
-    try:
-        timings["stream_votes_pipeline"] = round(bench_stream(spark), 3)
-    except Exception as ex:  # never lose the whole bench record to one section
-        errors["stream_votes_pipeline"] = repr(ex)
-        print(f"stream bench failed: {ex!r}", file=sys.stderr)
+    if "stream_votes_pipeline" in selected:
+        try:
+            timings["stream_votes_pipeline"] = round(bench_stream(spark), 3)
+        except Exception as ex:  # never lose the whole record to one section
+            errors["stream_votes_pipeline"] = repr(ex)
+            print(f"stream bench failed: {ex!r}", file=sys.stderr)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -363,4 +407,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

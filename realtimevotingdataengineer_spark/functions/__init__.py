@@ -25,6 +25,17 @@ PARTIES = ["Management_Party", "Savior_Party", "Tech_Republic_Party"]
 TIME_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
+def shuffle_width(spark) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as an int.
+
+    Contract: the value is an integer. Spark 4.1 type-checks this conf on
+    ``conf.set`` and rejects a non-integer such as ``'auto'`` with
+    INVALID_CONF_VALUE.TYPE_MISMATCH; tests/test_plans.py pins that
+    rejection, so a Spark that starts accepting ``'auto'`` fails that
+    test instead of crashing the callers here."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+
+
 def spread(df, *cols):
     """Repartition a small-but-compute-heavy DataFrame across the session's
     full parallelism. Local single-file parquet reads arrive as ONE
@@ -43,7 +54,7 @@ def spread(df, *cols):
     execution. Every operator using spread() is partition-invariant by
     repo rule (order-pinned folds / explicit tie-breaks), so the two
     shapes are result-identical — asserted in tests/test_plans.py."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = shuffle_width(df.sparkSession)
     try:
         # Guarded to SINGLE-relation lineage: inputFiles() aggregates
         # files across the whole plan, so on a joined/unioned frame the
@@ -179,10 +190,6 @@ def tokens(col: Column | str) -> Column:
     return F.split(normalize_text(c), " ")
 
 
-def md5_hex(col: Column) -> Column:
-    return F.md5(col)
-
-
 #: The DuckDB-SQL twin of ``tokens("text")`` — THE single definition all
 #: oracle strings must build on (dedup/text/corpus compose their CTEs
 #: from it; a second copy drifting from normalize_text/tokens would
@@ -257,10 +264,9 @@ def counts_to_vector(
         .select(*group_cols, vec.alias(out))
     )
     if wide:
-        n = int(
-            dims.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        res = res.repartition(
+            shuffle_width(dims.sparkSession), *[F.col(c) for c in group_cols]
         )
-        res = res.repartition(n, *[F.col(c) for c in group_cols])
     return res
 
 

@@ -69,8 +69,8 @@ SRP_XWIDE_MIN_N = 1 << 20
 #: pool. Instead of flipping all 1,536 bits, probe only the
 #: SRP_XWIDE_PROBE_T lowest-|margin| hyperplane flips (Lv et al. 2007
 #: — see similarity.srp_directed_probes), measured recall-first on the
-#: ladder tool (tools/probe_srp_directed_multiprobe.py). T=128 is the
-#: MEASURED knee at the rung's natural n=1.2M regime
+#: ladder probe (NOTES.md round 15, "Directed-multiprobe ladder").
+#: T=128 is the MEASURED knee at the rung's natural n=1.2M regime
 #: (tools/probe_srp_directed_r15_n1200k.log): planted recall@10 0.993
 #: at candidate fraction 0.0823 — 4.5× below all-flips' 0.368 and
 #: below even the wide rung's single-probe 0.133; recall reaches
@@ -1601,8 +1601,9 @@ def dedup_embedding_cosine(t: Tables) -> DataFrame:
     )
 
 
-#: Multi-probe width for bucketed embedding dedup: each vector joins its
-#: 4 nearest buckets for candidate generation. Round 12, re-measured per
+#: Multi-probe width for bucketed embedding dedup (derived from the
+#: codebook since round 13: similarity.probe_rung, p = log₂(k)). Round 12
+#: joined each vector to its 4 nearest buckets, re-measured per
 #: codebook rung when k became corpus-derived (codebook_rung ≈ √n): at a
 #: wider codebook a fixed 2-probe covers a shrinking border fraction —
 #: measured recall fell to 0.42 (sf0.01, k=32) / 0.34 (sf0.1, k=64).
@@ -1626,11 +1627,6 @@ def dedup_embedding_cosine(t: Tables) -> DataFrame:
 #: SRP_WIDE_MIN_N, background fraction 0.407 → 0.134 measured at
 #: n=20.5k, 862s → 275s at recall 0.935 → 0.925, rung derived from the
 #: corpus count in engine and oracle alike).
-#:
-#: Round 13: the REGISTERED dedup path no longer uses this constant —
-#: probe width derives from the codebook (similarity.probe_rung,
-#: p = log₂(k)); kept for probe tools comparing fixed-p baselines.
-DEDUP_N_PROBE = 4
 
 #: Verify-stage sizing: one partition per this many candidate pairs
 #: (each pair costs a 64-term cosine — compute-dense rows, so partition

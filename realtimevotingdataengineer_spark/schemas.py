@@ -86,8 +86,3 @@ VOTE_EVENT_SCHEMA = StructType(
         StructField("vote", IntegerType(), True),
     ]
 )
-
-
-def flatten_address_columns(prefix: str = "address") -> list[str]:
-    """The relational address_* column names (main.py:37-41)."""
-    return [f"{prefix}_{f.name}" for f in ADDRESS_SCHEMA.fields]

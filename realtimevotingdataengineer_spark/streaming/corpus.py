@@ -1197,7 +1197,8 @@ def stream_dedup_srp(
     degenerate signatures; the right call when the source rate limit
     (maxOffsetsPerTrigger / maxFilesPerTrigger) keeps micro-batches
     small. For DEGENERATE streams (uniform signatures, the worst-case
-    fixture in tools/stream_srp_throughput.py) dial the caps DOWN
+    fixture of PERF.md's round-9 "Streaming EMBEDDING gate probe" and
+    round-10 caps table) dial the caps DOWN
     instead (measured: 16/256 lifts the uniform fixture from ~360 to
     ~3.4k vecs/s at 128k-vec batches). Same adaptive admit contract as
     stream_dedup_minhash: ``distributed_admit=None`` switches to the

@@ -1,11 +1,18 @@
-"""Mutation tests for the oracle comparator: the correctness gate must
-actually fail on wrong results (guards against a vacuous comparison)."""
+"""Tests for the measurement and correctness harnesses: the oracle
+comparator must actually fail on wrong results (guards against a
+vacuous comparison), every script starts Spark through one builder, and
+bench.py's timing loop survives a failing key."""
 
 from __future__ import annotations
 
+import ast
+import importlib.util
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+REPO = Path(__file__).resolve().parents[1]
+TOOLS = REPO / "tools"
+sys.path.insert(0, str(TOOLS))
 
 from check_oracle import compare  # noqa: E402
 
@@ -34,3 +41,60 @@ def test_comparator_order_insensitive(spark):
     df = spark.createDataFrame([(2, "b"), (1, "a")], "k int, s string")
     ok = compare("t", df, "SELECT * FROM (VALUES (1, 'a'), (2, 'b')) t(k, s)")
     assert ok == "OK"
+
+
+def _scripts() -> list[Path]:
+    return [REPO / "bench.py", *sorted(TOOLS.glob("*.py"))]
+
+
+def test_scripts_build_spark_through_get_spark():
+    """bench.py and every tool start Spark via session.get_spark (the
+    bench config lives once, in bench.bench_session) — no hand-copied
+    SparkSession.builder blocks."""
+    offenders = [p.name for p in _scripts() if "SparkSession.builder" in p.read_text()]
+    assert offenders == []
+
+
+def test_tool_imports_resolve():
+    """Every module a script imports resolves (tools/ is on sys.path
+    here, so sibling scripts count) — a deleted helper script cannot
+    leave a dangling ``from <sibling> import``."""
+    missing = []
+    for path in _scripts():
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom) and node.level == 0:
+                names = [node.module]
+            elif isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            missing += [
+                f"{path.name}: {name}"
+                for name in names
+                if importlib.util.find_spec(name.split(".")[0]) is None
+            ]
+    assert missing == []
+
+
+def test_time_keys_records_errors_without_aborting(spark, sf_dir, monkeypatch):
+    """bench.time_keys (the one timing loop behind bench.py, bench_drift
+    and profile_key) returns a (construct, execute) pair per rep for a
+    good key and an error entry for a key that raises, and keeps timing
+    the keys after it."""
+    import bench
+    from realtimevotingdataengineer_spark.registry import QUERIES
+    from realtimevotingdataengineer_spark.sources.tables import Tables
+
+    def broken(t):
+        raise RuntimeError("broken key")
+
+    monkeypatch.setitem(QUERIES, "test_broken_key", broken)
+    keys = ["agg_count_rows", "test_broken_key", "agg_votes_per_candidate"]
+    runs, errors = bench.time_keys(Tables(spark, sf_dir), keys, reps=2)
+    assert list(runs) == ["agg_count_rows", "agg_votes_per_candidate"]
+    for parts in runs.values():
+        assert len(parts) == 2
+        for construct, execute in parts:
+            assert construct >= 0 and execute > 0
+    assert list(errors) == ["test_broken_key"]
+    assert "broken key" in errors["test_broken_key"]

@@ -384,6 +384,26 @@ def test_spread_stands_aside_on_cluster_split_input(spark, tmp_path):
     assert a == b == sorted((i, 2 * i) for i in range(500))
 
 
+def test_shuffle_width_conf_rejects_auto(spark):
+    """functions.shuffle_width's contract: spark.sql.shuffle.partitions is
+    always an integer, because Spark refuses a non-integer such as
+    'auto' at conf.set. A Spark that starts accepting it fails here
+    instead of spread()/counts_to_vector() crashing on int('auto')."""
+    from pyspark.errors import IllegalArgumentException
+
+    from realtimevotingdataengineer_spark.functions import shuffle_width
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        with pytest.raises(
+            IllegalArgumentException, match="INVALID_CONF_VALUE.TYPE_MISMATCH"
+        ):
+            spark.conf.set("spark.sql.shuffle.partitions", "auto")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert shuffle_width(spark) == int(before)
+
+
 def test_knn_arrow_topk_inside_kernel_no_window(t):
     """sim_knn_graph_arrow does its per-src top-k INSIDE the BLAS kernel,
     so the plan must contain the grouped-map node and NO window operator

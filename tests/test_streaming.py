@@ -749,8 +749,9 @@ def test_stream_gates_survive_restart(spark, sf_dir, tmp_path):
 
 def test_stream_dedup_srp_tight_caps_exact_on_degenerate(spark, sf_dir, tmp_path):
     """The DEGENERATE-MODE dial: stream_dedup_srp with tightened caps
-    (clique_cap=16, probe_cap=256 — the tools/stream_srp_throughput.py
-    worst-case setting) must stay EXACT on the regime the dial exists
+    (clique_cap=16, probe_cap=256 — the worst-case setting of PERF.md's
+    round-9 "Streaming EMBEDDING gate probe" and round-10 caps table)
+    must stay EXACT on the regime the dial exists
     for — identical-vector floods, where sub-banding cannot split the
     bucket and the star fallback carries the whole contract. 90 copies
     of one embedding and 10 of its negation (bitwise-complement

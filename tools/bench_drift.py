@@ -8,18 +8,18 @@ Usage: python tools/bench_drift.py BENCH_old.json BENCH_new.json [top] [reps]
 
 Picks the ``top`` (default 3) keys with the largest new/old TOTAL-time
 ratio among keys present in both records, re-runs each best-of-``reps``
-(default 3) under bench.py's exact session config, and prints ONE JSON
+(default 3) on bench.py's session and timing loop, and prints ONE JSON
 line per invocation:
 
   {"metric": "bench_drift_recheck", "keys": {name: {"old": s, "new": s,
-   "ratio": r, "rerun_best": s, "rerun_all": [s, ...]}}, ...}
+   "ratio": r, "rerun_best": s, "rerun_all": [[c, e], ...]}}, ...}
 
 A rerun_best back near ``old`` (or well under ``new``) means the bench
 delta was host drift; a rerun_best that reproduces ``new`` is a real
-regression to investigate. Reruns time construct+execute together, so
-for keys with eager build-time work compare rerun_best against
-old+new's construct+execute sum, not execute alone (driver-wrapper
-tails only carry the execute map — see _per_key).
+regression to investigate. Reruns go through bench.time_keys, so each
+rep is split like the bench record: ``rerun_best`` is the fastest rep's
+execute seconds (what ``old``/``new`` hold when the records carry an
+execute map), ``rerun_all`` lists every rep as [construct, execute].
 """
 
 from __future__ import annotations
@@ -27,15 +27,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
-import realtimevotingdataengineer_spark.operators  # noqa: F401,E402
+from bench import bench_session, bench_tables, time_keys  # noqa: E402
 from realtimevotingdataengineer_spark.registry import QUERIES  # noqa: E402
-from realtimevotingdataengineer_spark.sources.tables import Tables  # noqa: E402
 
 
 def _per_key(path: str) -> dict[str, float]:
@@ -48,7 +44,10 @@ def _per_key(path: str) -> dict[str, float]:
     records."""
     import re
 
-    rec = json.load(open(path))
+    with open(path) as f:
+        # the first JSON value: bench.py prints its full record, then a
+        # compact summary line
+        rec, _ = json.JSONDecoder().raw_decode(f.read().lstrip())
     if "execute" in rec:  # prefer execute: it's what driver tails carry
         return {k: float(v) for k, v in rec["execute"].items()}
     if "queries" in rec:
@@ -71,40 +70,17 @@ def main() -> None:
 
     load_start = list(os.getloadavg())
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("bench_drift")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.sql.files.openCostInBytes", "131072")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    t = Tables(spark, sf_dir)
-    QUERIES["agg_count_rows"](t).write.mode("overwrite").format("noop").save()
+    t = bench_tables(bench_session("bench_drift"), sf_dir)
+    runs, errors = time_keys(t, moved, reps)
 
     out: dict[str, dict] = {}
-    for name in moved:
-        runs: list[float] = []
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            QUERIES[name](t).write.mode("overwrite").format("noop").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-            spark.sparkContext._jvm.System.gc()  # noqa: SLF001
+    for name, parts in runs.items():
         out[name] = {
             "old": old_q[name],
             "new": new_q[name],
             "ratio": round(new_q[name] / old_q[name], 3),
-            "rerun_best": min(runs),
-            "rerun_all": runs,
+            "rerun_best": round(min(parts, key=sum)[1], 3),
+            "rerun_all": [[round(c, 3), round(e, 3)] for c, e in parts],
         }
     print(
         json.dumps(
@@ -113,6 +89,7 @@ def main() -> None:
                 "sf_dir": sf_dir,
                 "reps": reps,
                 "keys": out,
+                "errors": errors,
                 "load_avg_start": load_start,
                 "load_avg_end": list(os.getloadavg()),
             }

@@ -11,10 +11,11 @@ match bitwise).
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
@@ -180,24 +181,23 @@ def compare(name, spark_df, sql) -> str:
 
 
 def main():
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as e
+    from realtimevotingdataengineer_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("check-oracle")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        # round 11: Arrow toPandas — the non-Arrow collect was 23s of
-        # dedup_simhash_hamming's sweep time at sf0.1 (3.5M rows); the
-        # sweep itself re-verifies value equality end to end, so any
-        # Arrow conversion drift would fail loudly as a VALUE diff
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
+    spark = get_spark(
+        "local[8]",
+        {
+            "spark.app.name": "check-oracle",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.ui.enabled": "false",
+            "spark.sql.shuffle.partitions": "8",
+            "spark.driver.memory": "8g",
+            # round 11: Arrow toPandas — the non-Arrow collect was 23s of
+            # dedup_simhash_hamming's sweep time at sf0.1 (3.5M rows); the
+            # sweep itself re-verifies value equality end to end, so any
+            # Arrow conversion drift would fail loudly as a VALUE diff
+            "spark.sql.execution.arrow.pyspark.enabled": "true",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     global _FXDIR

@@ -2,6 +2,11 @@
 
 Usage: python tools/explain_plan.py [sf_dir] key [key ...]
 
+Plans are built on bench.py's session (sf0.01 unless ``sf_dir`` is
+given); pass the bench's sf dir to get the plan the bench times.
+Redirect stdout to keep a before/after record, e.g.
+``python tools/explain_plan.py <sf0.1 dir> KEY > plans/rN/KEY_before.txt``.
+
 The evidence loop for the 100 TB posture: check PushedFilters /
 ReadSchema on scans, BroadcastHashJoin vs SortMergeJoin, Exchange
 count, WholeStageCodegen spans. tests/test_plans.py pins the properties
@@ -10,13 +15,12 @@ that must not regress; this tool is for eyeballing the rest.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
-import realtimevotingdataengineer_spark.operators  # noqa: F401,E402
+from bench import bench_session  # noqa: E402
 from realtimevotingdataengineer_spark.registry import QUERIES  # noqa: E402
 from realtimevotingdataengineer_spark.sources.tables import Tables  # noqa: E402
 
@@ -25,16 +29,7 @@ KEYS = [a for a in sys.argv[1:] if "/" not in a]
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    t = Tables(spark, SF_DIR)
+    t = Tables(bench_session("explain_plan"), SF_DIR)
     for key in KEYS:
         print(f"\n{'=' * 70}\n{key}\n{'=' * 70}")
         QUERIES[key](t).explain("formatted")

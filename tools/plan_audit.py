@@ -13,16 +13,16 @@ Usage: python tools/plan_audit.py [sf_dir] > PLANS_r{N}.md
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql import SparkSession  # noqa: E402
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import realtimevotingdataengineer_spark.operators  # noqa: E402,F401
 from realtimevotingdataengineer_spark.plans import formatted_plan  # noqa: E402
 from realtimevotingdataengineer_spark.registry import QUERIES  # noqa: E402
+from realtimevotingdataengineer_spark.session import get_spark  # noqa: E402
 from realtimevotingdataengineer_spark.sources.tables import Tables  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
@@ -31,12 +31,13 @@ _NODE = re.compile(r"^\s*\(\d+\) ([A-Za-z]+)", re.M)
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        "local[8]",
+        {
+            "spark.sql.shuffle.partitions": "8",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.ui.enabled": "false",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     t = Tables(spark, SF_DIR)

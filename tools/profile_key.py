@@ -1,7 +1,7 @@
-"""Per-key profiler for the optimization rounds: bench-identical session
-(configs copied from bench.py, UI ENABLED for REST metrics), one key at a
-time — construct/execute split like the bench, plus per-JOB wall times
-and per-stage shuffle/spill/input so the time can be attributed to a
+"""Per-key profiler for the optimization rounds: bench.py's session
+(plus the UI, for REST metrics) and timing loop, one key at a time —
+construct/execute split like the bench, plus per-JOB wall times and
+per-stage shuffle/spill/input so the time can be attributed to a
 specific job (localCheckpoint, count, noop write) instead of guessed.
 
 Usage: python tools/profile_key.py [sf_dir] key [key ...]
@@ -13,16 +13,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
-import realtimevotingdataengineer_spark.operators  # noqa: F401,E402
-from realtimevotingdataengineer_spark.registry import QUERIES  # noqa: E402
-from realtimevotingdataengineer_spark.sources.tables import Tables  # noqa: E402
+from bench import bench_session, bench_tables, time_keys  # noqa: E402
 
 SF_DIR = (
     sys.argv[1]
@@ -40,50 +35,25 @@ def rest(spark, path: str):
 
 
 def main() -> None:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("profile_key")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.sql.files.openCostInBytes", "131072")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "true")  # REST metrics (bench runs ui off)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    t = Tables(spark, SF_DIR)
-
-    # same warmup as bench.py
-    QUERIES["agg_count_rows"](t).write.mode("overwrite").format("noop").save()
+    # REST metrics need the UI (the bench runs with it off)
+    spark = bench_session("profile_key", {"spark.ui.enabled": "true"})
+    t = bench_tables(spark, SF_DIR)
 
     for name in KEYS:
         # warm rep first (bench takes best-of-2); profile the SECOND rep
-        spark.catalog.clearCache()
-        df = QUERIES[name](t)
-        df.write.mode("overwrite").format("noop").save()
-        spark.sparkContext._jvm.System.gc()  # noqa: SLF001
-
-        spark.catalog.clearCache()
+        time_keys(t, [name], reps=1)
         first_job = max((j["jobId"] for j in rest(spark, "/jobs")), default=-1) + 1
         first_stage = max(
             (s["stageId"] for s in rest(spark, "/stages")), default=-1
         ) + 1
-        t0 = time.perf_counter()
-        spark.sparkContext.setJobDescription(f"{name}: construct")
-        df = QUERIES[name](t)
-        t1 = time.perf_counter()
-        spark.sparkContext.setJobDescription(f"{name}: execute")
-        df.write.mode("overwrite").format("noop").save()
-        t2 = time.perf_counter()
-        spark.sparkContext.setJobDescription(None)
-
-        print(f"\n=== {name} @ {SF_DIR}  construct={t1 - t0:.3f}s "
-              f"execute={t2 - t1:.3f}s total={t2 - t0:.3f}s (warm rep)")
+        runs, errors = time_keys(t, [name], reps=1)
+        if errors:
+            print(f"\n=== {name} @ {SF_DIR}  FAILED: {errors[name]}")
+            continue
+        [(construct, execute)] = runs[name]
+        print(f"\n=== {name} @ {SF_DIR}  construct={construct:.3f}s "
+              f"execute={execute:.3f}s total={construct + execute:.3f}s "
+              "(warm rep)")
         jobs = [j for j in rest(spark, "/jobs") if j["jobId"] >= first_job]
         jobs.sort(key=lambda j: j["jobId"])
         print(f"{'job':>4} {'sec':>7} {'stages':>6} {'tasks':>6}  description")
@@ -119,7 +89,6 @@ def main() -> None:
                 f"{s.get('shuffleWriteBytes', 0) / 2**20:>8.2f}  "
                 f"{s.get('name', '')[:60]}"
             )
-        spark.sparkContext._jvm.System.gc()  # noqa: SLF001
 
 
 if __name__ == "__main__":

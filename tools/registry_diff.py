@@ -17,10 +17,11 @@ from __future__ import annotations
 
 import argparse
 import glob
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 LINE = re.compile(r"^\[(PASS|FAIL)\]\s+(\S+)")
 
@@ -110,7 +111,9 @@ def main() -> int:
     for sf, tags in SF_TAGS.items():
         paths = sorted(
             p
-            for p in glob.glob(f"/root/repo/tools/{args.logs}.log")
+            for p in glob.glob(
+                os.path.join(os.path.dirname(os.path.abspath(__file__)), f"{args.logs}.log")
+            )
             if any(t in p for t in tags)
         )
         passed, failed = log_results(paths)

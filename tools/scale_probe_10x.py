@@ -25,10 +25,11 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+from realtimevotingdataengineer_spark.session import get_spark  # noqa: E402
 
 COPIES = int(sys.argv[1]) if len(sys.argv) > 1 else 10
 KEYS = sys.argv[2:] or ["dedup_minhash_lsh", "corpus_pack_sequences_sharded"]
@@ -106,15 +107,15 @@ def stage_metrics(spark, after_stage: int) -> dict:
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "true")  # REST metrics source
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+    spark = get_spark(
+        "local[32]",
+        {
+            "spark.sql.shuffle.partitions": "32",
+            "spark.sql.files.maxPartitionBytes": "4m",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.ui.enabled": "true",  # REST metrics source
+            "spark.driver.memory": "16g",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     build_corpus(spark)

@@ -14,15 +14,16 @@ Usage: python tools/stream_corpus_throughput.py [docs_per_sec] [seconds]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import time  # noqa: E402
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from realtimevotingdataengineer_spark.session import get_spark  # noqa: E402
 from realtimevotingdataengineer_spark.streaming import corpus, sinks  # noqa: E402
 
 RATE = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
@@ -37,18 +38,17 @@ DOC_TOKENS = 32
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        .getOrCreate()
+    spark = get_spark(
+        "local[32]",
+        {
+            "spark.sql.shuffle.partitions": "8",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.ui.enabled": "false",
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider"
+            ),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

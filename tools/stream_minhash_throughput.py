@@ -16,17 +16,18 @@ Usage: python tools/stream_minhash_throughput.py [docs_per_sec] [seconds]
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import time  # noqa: E402
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from realtimevotingdataengineer_spark.session import get_spark  # noqa: E402
 from realtimevotingdataengineer_spark.streaming import corpus  # noqa: E402
 
 RATE = int(sys.argv[1]) if len(sys.argv) > 1 else 5_000
@@ -42,19 +43,19 @@ DOC_TOKENS = 32
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        # stop() interrupts the in-flight foreachBatch; Spark's
-        # isInterruptionException then regexes the multi-KB py4j
-        # exception string and java.util.regex recurses per char —
-        # the default 1m thread stack dies with StackOverflowError.
-        .config("spark.driver.extraJavaOptions", "-Xss64m")
-        .getOrCreate()
+    spark = get_spark(
+        "local[32]",
+        {
+            "spark.sql.shuffle.partitions": "8",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "8g",
+            # stop() interrupts the in-flight foreachBatch; Spark's
+            # isInterruptionException then regexes the multi-KB py4j
+            # exception string and java.util.regex recurses per char —
+            # the default 1m thread stack dies with StackOverflowError.
+            "spark.driver.extraJavaOptions": "-Xss64m",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="mh_gate_")

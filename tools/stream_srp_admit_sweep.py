@@ -29,11 +29,11 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from realtimevotingdataengineer_spark.session import get_spark  # noqa: E402
 from realtimevotingdataengineer_spark.streaming import corpus  # noqa: E402
 
 SIZES = (
@@ -62,13 +62,14 @@ def vm_rss_mb() -> float:
 
 def main() -> None:
     corpus.ADMIT_DRIVER_MAX = THRESHOLD
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", DRIVER_MEM)
-        .getOrCreate()
+    spark = get_spark(
+        "local[32]",
+        {
+            "spark.sql.shuffle.partitions": "32",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": DRIVER_MEM,
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     emb = F.transform(
