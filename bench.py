@@ -276,8 +276,10 @@ def bench_stream(spark) -> float:
     except Exception:
         pass  # fall back to the HDFS-backed store
     # Stateful-op parallelism is per-query (fixed by the first checkpoint):
-    # size it to state volume, not core count — 32 state partitions at this
-    # volume is pure per-batch task overhead (measured 8.1s vs 3.4s at 8).
+    # size it to state volume, not core count — each state partition costs
+    # a task, a store load and a commit per batch. Measured 8.1s at 32 vs
+    # 3.4s at 8; re-measured once changelog checkpoints made commits cheap
+    # (warm, 4 cores): 4.25s at 32 vs 2.34s at 8, so the pin still pays.
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:

@@ -99,13 +99,21 @@ def local_rows_df(spark, rows, schema):
     (Scan ExistingRDD → Range + Generate inline).
 
     Empty or >_LOCAL_DF_MAX_ROWS inputs fall back to createDataFrame
-    (inline needs ≥1 struct; giant literal trees would bloat the plan).
+    (inline needs ≥1 struct; giant literal trees would bloat the plan),
+    and so does any row that is not a tuple or list with exactly one
+    value per schema field: createDataFrame validates it and raises,
+    where zipping it against the fields would drop or misplace values.
     """
     from pyspark.sql.types import StructType, _parse_datatype_string
 
     st = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
     rows = list(rows)
-    if not rows or len(rows) > _LOCAL_DF_MAX_ROWS:
+    width = len(st.fields)
+    if (
+        not rows
+        or len(rows) > _LOCAL_DF_MAX_ROWS
+        or any(not isinstance(r, (tuple, list)) or len(r) != width for r in rows)
+    ):
         return spark.createDataFrame(rows, st)
     structs = [
         F.struct(

@@ -19,6 +19,9 @@ Scale notes:
 
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -300,28 +303,38 @@ def _gate_tokens(t: Tables) -> DataFrame:
     )
 
 
+@contextmanager
 def _gate_tokens_async(t: Tables):
     """Kick off the gate tokenization's materialization on a driver
-    thread and return a join()-style handle (§2.6 overlap-independent-
+    thread and yield a join()-style handle (§2.6 overlap-independent-
     jobs): the export capstones' construct is otherwise a strictly
     sequential chain of small jobs (minhash materializations, then
     2 jobs × CC rounds), during which the cluster is mostly idle — the
     tokenize job back-fills it. Job submission is thread-safe; the
     handle re-raises any thread-side failure. The ``documents`` handle
     is bound BEFORE the thread starts so the Tables lazy-attr cache is
-    not raced."""
-    import threading
+    not raced.
 
+    The thread's job runs in its own job group (the caller's other
+    local properties, such as the job description, are inherited). If
+    the ``with`` body raises, that group is cancelled until the thread
+    ends, so no tokenize job outlives a failed label chain."""
+    from pyspark import InheritableThread
+
+    sc = t.spark.sparkContext
     df = _gate_tokens(t)  # binds t.documents on the caller's thread
+    group = f"gate-tokens-{uuid.uuid4().hex}"
     holder: dict = {}
 
     def _mat() -> None:
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        sc.setLocalProperty("spark.job.interruptOnCancel", "true")
         try:
             holder["tk"] = df.localCheckpoint(eager=True)
-        except BaseException as ex:  # noqa: BLE001 — re-raised in join
+        except Exception as ex:  # noqa: BLE001 — re-raised in join
             holder["err"] = ex
 
-    th = threading.Thread(target=_mat, name="gate-tokens-mat", daemon=True)
+    th = InheritableThread(target=_mat, name="gate-tokens-mat", daemon=True)
     th.start()
 
     def join() -> DataFrame:
@@ -330,7 +343,15 @@ def _gate_tokens_async(t: Tables):
             raise holder["err"]
         return holder["tk"]
 
-    return join
+    try:
+        yield join
+    except BaseException:
+        # a job submitted after a cancel is not cancelled: repeat until
+        # the thread has returned
+        while th.is_alive():
+            sc.cancelJobGroup(group)
+            th.join(0.1)
+        raise
 
 
 def _survivorship_gate(
@@ -390,9 +411,9 @@ def pipeline_pretrain_corpus(t: Tables) -> DataFrame:
     # §2.6: the gate tokenization materializes on a driver thread while
     # the label chain's sequential small jobs run — the tokenize job
     # back-fills executors the CC rounds leave idle
-    tk_join = _gate_tokens_async(t)
-    labels = dedup_clusters(t)
-    return _survivorship_gate(t, labels, tk_join()).orderBy("doc_id")
+    with _gate_tokens_async(t) as tk_join:
+        labels = dedup_clusters(t)
+        return _survivorship_gate(t, labels, tk_join()).orderBy("doc_id")
 
 
 def pretrain_corpus_from_labels(t: Tables, labels_path: str) -> DataFrame:
@@ -815,9 +836,9 @@ def pipeline_export_corpus_incremental(t: Tables) -> DataFrame:
 
     # §2.6: tokenize overlaps the TWO sequential CC invocations of the
     # contraction chain (see pipeline_pretrain_corpus)
-    tk_join = _gate_tokens_async(t)
-    labels = incremental_cluster_labels(t)
-    return _export_layout(t, _survivorship_gate(t, labels, tk_join()))
+    with _gate_tokens_async(t) as tk_join:
+        labels = incremental_cluster_labels(t)
+        return _export_layout(t, _survivorship_gate(t, labels, tk_join()))
 
 
 #: Context-window length for sequence packing (tokens per training

@@ -15,10 +15,10 @@ from pyspark.sql import SparkSession
 
 APP_NAME = "realtimevotingdataengineer-spark"
 
-#: Batch-session defaults. At 100 TB these are cluster-level knobs; the
+#: Session defaults. At 100 TB these are cluster-level knobs; the
 #: values here are sized for local[32] test runs but the *shape* of the
-#: config (AQE + skew join handling + sane shuffle parallelism) is what
-#: carries to a 1000-executor deployment.
+#: config (AQE + skew join handling + sane shuffle parallelism, cheap
+#: streaming checkpoints) is what carries to a 1000-executor deployment.
 BATCH_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
@@ -28,6 +28,26 @@ BATCH_CONF = {
     # Arrow for any pandas_udf / mapInPandas path (the only sanctioned
     # Python-side execution route — never row-at-a-time UDFs).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Streaming checkpoints. Without Hadoop's native library (the pip
+    # wheel ships none), its local file system forks a shell (readlink,
+    # chmod, rm) for link resolution, permissions and recursive deletes.
+    # A JFR recording of jdk.ProcessStart on the live tally counted ~230
+    # forks per micro-batch with Spark's defaults and ~43 with the two
+    # settings below (PERF.md, "Streaming checkpoints without shell
+    # forks"; pinned by tests/test_streaming.py).
+    # A RocksDB commit writes one changelog file per store instead of
+    # uploading SST files plus a zip and deleting its local checkpoint;
+    # snapshots move to the maintenance thread.
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    # Offset/commit log and state files are renamed into place with
+    # FileSystem.rename (File.renameTo on file:) instead of FileContext,
+    # whose rename resolves both sides with a readlink fork. Neither is
+    # more atomic on file: (FileContext also checks, then renames), and
+    # HDFS's two-argument rename fails if the destination exists.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

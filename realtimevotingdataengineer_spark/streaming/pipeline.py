@@ -15,9 +15,14 @@ a Kafka stream, a file-backed text stream (tests — no broker in CI), or
 a bounded batch DataFrame (the oracle twins in operators/relational.py).
 
 Scale posture: the stateful ops (dropDuplicates, groupBy tallies) key
-their state by voter_id / candidate — uniform keys, bounded by the
-watermark; use the RocksDB state store in production. AQE stays OFF for
-streaming plans (reference pins this too, spark-streaming.py:27).
+their state by voter_id / candidate — uniform keys. The watermark does
+NOT bound that state: neither key holds the event-time column, so Spark
+never evicts a row. Dedup state grows by one row per distinct voter
+(the reference's Postgres UNIQUE also held forever) and the tally holds
+one row per candidate. Only dedup_one_vote_within and the windowed,
+session and stream-stream join operators below evict state past the
+watermark. Use the RocksDB state store in production. AQE stays OFF
+for streaming plans (reference pins this too, spark-streaming.py:27).
 """
 
 from __future__ import annotations
@@ -28,9 +33,12 @@ from pyspark.sql import functions as F
 from ..functions import TIME_FMT
 from ..schemas import VOTE_EVENT_SCHEMA
 
-#: Watermark bound for dedup/tally state GC. One vote per voter must hold
-#: within this horizon; the reference's Postgres UNIQUE held it forever,
-#: a stream processor must bound state (SURVEY.md §2.7).
+#: Event-time lateness bound: a row whose voting_time is further than this
+#: behind the latest seen reaches a stateful operator after the watermark
+#: and is dropped there. It GCs the state of dedup_one_vote_within and of
+#: the operators keyed on event time (windows, sessions, the stream-stream
+#: join); dedup_one_vote and the tallies are keyed without it, so their
+#: state is not bounded by it.
 WATERMARK = "10 minutes"
 
 
@@ -109,8 +117,17 @@ def with_event_time(events: DataFrame) -> DataFrame:
 
 def dedup_one_vote(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
     """One vote per voter (UNIQUE(voter_id) main.py:55; insert-then-
-    produce ordering voting.py:112-126) as bounded-state streaming dedup.
-    State is GC'd past the watermark — the price of unbounded streams."""
+    produce ordering voting.py:112-126) as streaming dedup on voter_id.
+
+    The key lacks the event-time column, so the watermark never evicts a
+    voter: the state keeps one row per distinct voter for the life of the
+    query, and a re-vote any time later is still suppressed, as the
+    reference's UNIQUE did. The watermark only drops votes that arrive
+    later than it, and only while voting_time is still a column at the
+    dedup: a downstream projection without it (tally_per_candidate's
+    aggregate) is pushed below the dedup, and then no vote is late.
+    ``dedup_one_vote_within`` is the variant whose state the watermark
+    bounds."""
     return with_event_time(events).withWatermark("voting_time", watermark).dropDuplicates(
         ["voter_id"]
     )

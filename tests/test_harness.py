@@ -43,6 +43,43 @@ def test_comparator_order_insensitive(spark):
     assert ok == "OK"
 
 
+def test_get_spark_sets_streaming_checkpoint_defaults(spark, monkeypatch):
+    """get_spark's conf carries both streaming checkpoint settings (RocksDB
+    changelog commits, the FileSystem checkpoint manager), the manager
+    class exists, and a caller's extra_conf still wins."""
+    from types import SimpleNamespace
+
+    from realtimevotingdataengineer_spark import session
+
+    manager = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    conf: dict = {}
+
+    class Builder:
+        def appName(self, _name):
+            return self
+
+        def master(self, _master):
+            return self
+
+        def config(self, key, value):
+            conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return conf
+
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
+    got = session.get_spark()
+    assert got["spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"] == "true"
+    assert got["spark.sql.streaming.checkpointFileManagerClass"] == manager
+    spark._jvm.java.lang.Class.forName(manager)
+    key = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    assert session.get_spark(extra_conf={key: "false"})[key] == "false"
+
+
 def _scripts() -> list[Path]:
     return [REPO / "bench.py", *sorted(TOOLS.glob("*.py"))]
 

@@ -2820,3 +2820,44 @@ def test_local_rows_df_equals_createdataframe_and_stays_jvm(spark):
     assert "applySchemaToPythonRDD" not in plan
     # empty input falls back to createDataFrame (inline needs >=1 row)
     assert local_rows_df(spark, [], schema).count() == 0
+
+
+def test_local_rows_df_rejects_rows_of_the_wrong_width(spark):
+    """A row with fewer or more values than the schema has fields is not
+    zipped into a literal struct (which would silently drop or misplace
+    values): it goes to createDataFrame, which raises."""
+    from pyspark.errors import PySparkException
+
+    from realtimevotingdataengineer_spark.functions import local_rows_df
+
+    schema = "k bigint, s string"
+    with pytest.raises(PySparkException):
+        local_rows_df(spark, [(1, "a"), (2,)], schema).collect()
+    with pytest.raises(PySparkException):
+        local_rows_df(spark, [(1, "a", 0.5)], schema).collect()
+
+
+def test_gate_tokenize_job_cancelled_when_label_chain_fails(t, monkeypatch):
+    """pipeline_pretrain_corpus tokenizes on a driver thread while the
+    label chain runs. When the chain raises, the thread's job is
+    cancelled before the error propagates: no Spark job is left
+    running."""
+    import time
+
+    from realtimevotingdataengineer_spark.operators import dedup
+
+    tracker = t.spark.sparkContext.statusTracker()
+    seen = []
+
+    def failing_labels(_t):
+        deadline = time.monotonic() + 30
+        while not seen and time.monotonic() < deadline:
+            seen.extend(tracker.getActiveJobsIds())
+            time.sleep(0.01)
+        raise RuntimeError("label chain failed")
+
+    monkeypatch.setattr(dedup, "dedup_clusters", failing_labels)
+    with pytest.raises(RuntimeError, match="label chain failed"):
+        QUERIES["pipeline_pretrain_corpus"](t)
+    assert seen, "the tokenize job never started"
+    assert tracker.getActiveJobsIds() == []

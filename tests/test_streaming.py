@@ -9,6 +9,7 @@ late events, and a malformed line.
 from __future__ import annotations
 
 import json
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -234,6 +235,167 @@ def test_backpressure_bounded_batches(spark, tmp_path):
         "GROUP BY candidate_id, candidate_name, party_affiliation)"
     ).collect()[0][0]
     assert out == 100
+
+
+ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+_T0 = 1_700_000_000  # epoch s of the first vote
+
+
+def _vote_line(voter: int, at: int) -> str:
+    cand = voter % 3
+    return json.dumps(
+        {
+            "voter_id": f"voter-{voter}",
+            "voting_time": time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime(_T0 + at)),
+            "candidate_id": f"cand-{cand}",
+            "candidate_name": f"Candidate {cand}",
+            "party_affiliation": f"Party {cand}",
+            "vote": 1,
+        }
+    )
+
+
+def _write_vote_file(path, lines) -> None:
+    """Stage, then rename: the file source must never list a half-written
+    file."""
+    tmp = path.parent / f".{path.name}.tmp"
+    tmp.write_text("\n".join(lines))
+    tmp.rename(path)
+
+
+@pytest.fixture
+def checkpoint_defaults(spark):
+    """The streaming checkpoint settings of ``session.get_spark`` plus the
+    RocksDB state store, set on the shared test session and restored
+    afterwards."""
+    from realtimevotingdataengineer_spark.session import BATCH_CONF
+
+    conf = {k: v for k, v in BATCH_CONF.items() if k.startswith("spark.sql.streaming.")}
+    conf["spark.sql.streaming.stateStore.providerClass"] = ROCKSDB
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in prev.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+def _process_forks(spark, run, dump_path) -> int:
+    """Processes the JVM started while ``run()`` ran, counted from a JFR
+    recording of ``jdk.ProcessStart`` dumped to ``dump_path`` and read
+    back in the JVM."""
+    jvm = spark._jvm
+    rec = jvm.jdk.jfr.Recording()
+    try:
+        rec.enable("jdk.ProcessStart")
+        rec.start()
+        run()
+        rec.stop()
+        dump = jvm.java.io.File(str(dump_path)).toPath()
+        rec.dump(dump)
+        return jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump).size()
+    finally:
+        rec.close()
+
+
+def test_live_tally_restarts_from_changelog_checkpoints(
+    spark, tmp_path, checkpoint_defaults
+):
+    """The live tally on the session's checkpoint settings: RocksDB
+    changelog commits and the FileSystem checkpoint manager. Over files
+    with planted re-sends and a malformed line, one file per batch, the
+    tally is exact across a stop and restart from the checkpoint; the
+    commits are changelog files; and the checkpoint writes fork at most
+    80 processes per batch (~230 with Spark's defaults: without Hadoop's
+    native library every FileContext rename forks readlink, every create
+    chmod, and every RocksDB v1 commit rm -rf)."""
+    src = tmp_path / "votes"
+    src.mkdir()
+    ckpt = tmp_path / "ckpt"
+    per_file, n_files = 30, 6
+    voters = []
+
+    def add_file(i: int) -> None:
+        ids = range(i * per_file, (i + 1) * per_file)
+        lines = [_vote_line(v, i * 60 + v % per_file) for v in ids]
+        # identical at-least-once re-sends of the previous file's first votes
+        lines += [_vote_line(v, (i - 1) * 60 + v % per_file) for v in voters[-per_file:][:3]]
+        lines.insert(7, "{not valid json")
+        voters.extend(ids)
+        _write_vote_file(src / f"votes-{i:02d}.jsonl", lines)
+
+    totals: dict[str, int] = {}
+
+    def keep(batch, _batch_id) -> None:
+        for r in batch.collect():
+            totals[r.candidate_id] = r.total_votes
+
+    def run(files) -> None:
+        for i in files:
+            add_file(i)
+        raw = pipeline.read_text_stream(spark, str(src), max_files_per_trigger=1)
+        tally = pipeline.tally_per_candidate(
+            pipeline.dedup_one_vote(pipeline.parse_vote_events(raw))
+        )
+        q = (
+            tally.writeStream.foreachBatch(keep)
+            .option("checkpointLocation", str(ckpt))
+            .outputMode("update")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    forks = _process_forks(
+        spark,
+        lambda: (run(range(n_files // 2)), run(range(n_files // 2, n_files))),
+        tmp_path / "forks.jfr",
+    )
+
+    want: dict[str, int] = {}
+    for v in voters:
+        want[f"cand-{v % 3}"] = want.get(f"cand-{v % 3}", 0) + 1
+    assert totals == want
+    assert list((ckpt / "state" / "0" / "0").glob("*.changelog"))
+    batches = [f for f in (ckpt / "commits").iterdir() if f.name.isdigit()]
+    assert len(batches) >= n_files
+    assert forks <= 80 * len(batches), f"{forks} forks over {len(batches)} batches"
+
+
+def test_dedup_state_outlives_the_watermark(spark, tmp_path):
+    """dedup_one_vote keys its state on voter_id alone, so the watermark
+    drops late rows but never evicts a voter: after the watermark has
+    passed every vote of the first file, the state still holds one row
+    per distinct voter, and a re-vote with a fresh event time is still
+    suppressed (one vote per voter, as the reference's UNIQUE)."""
+    src = tmp_path / "votes"
+    src.mkdir()
+    first = [_vote_line(v, 0) for v in range(10)]
+    later = [_vote_line(v, 7200) for v in range(10, 20)]  # watermark -> 1h50m
+    # voter 0 again with a fresh time (a duplicate, still in state),
+    # voter 20 (new), voter 21 at the first file's time (late: dropped)
+    last = [_vote_line(0, 7200), _vote_line(20, 7200), _vote_line(21, 0)]
+    raw = pipeline.read_text_stream(spark, str(src), max_files_per_trigger=1)
+    deduped = pipeline.dedup_one_vote(pipeline.parse_vote_events(raw))
+    # the whole row goes to the sink: a projection without voting_time
+    # would be pushed below the dedup, and no row would be late there
+    q = sinks.write_memory(deduped, "dedup_wm_state", "append")
+    try:
+        for i, lines in enumerate([first, later, last]):
+            _write_vote_file(src / f"votes-{i}.jsonl", lines)
+            q.processAllAvailable()
+        state = [p for p in q.recentProgress if p["numInputRows"]][-1]["stateOperators"][0]
+    finally:
+        q.stop()
+    got = [r.voter_id for r in spark.sql("SELECT voter_id FROM dedup_wm_state").collect()]
+    assert sorted(got) == sorted(f"voter-{v}" for v in range(21))
+    assert state["numRowsTotal"] == 21
+    assert state["numRowsDroppedByWatermark"] == 1
 
 
 def test_stream_dedup_exact_matches_batch_groups(spark, sf_dir, tmp_path):
