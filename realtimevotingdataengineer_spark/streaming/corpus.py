@@ -20,7 +20,6 @@ points them at the Kafka/landing-zone source.
 from __future__ import annotations
 
 import logging
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -73,8 +72,9 @@ def _greedy_admit(ids, flagged, in_pairs) -> set:
     """First-arrival-wins over one micro-batch: walk ids ASCENDING,
     admit unless the id near-dups the persisted index (``flagged``) or
     an already-admitted id of the same batch (``in_pairs``, a < b).
-    Shared by every streaming near-dup gate so 'who survives' is one
-    rule. All inputs are batch-bounded by construction."""
+    Every streaming near-dup gate's admit (_greedy_admit_frames) ends
+    with this walk, so 'who survives' is one rule. All inputs are
+    batch-bounded by construction."""
     nbrs: dict = {}
     for a, b in in_pairs:
         nbrs.setdefault(b, set()).add(a)
@@ -86,32 +86,16 @@ def _greedy_admit(ids, flagged, in_pairs) -> set:
     return kept
 
 
-#: Round bound for the executor-side admit. Each round decides at
-#: least the minimum undecided id, and a round's frontier is the
-#: conflict graph's dependency depth — 1 for the clique/star buckets
-#: near-dup batches actually produce, pathological alternating CHAINS
-#: (a~b~c~d where a,c survive) need depth rounds and decide only ~2 ids
-#: per round — so the post-bound leftover is NOT depth-bounded small
-#: (round-11 advice; the old comment claimed it was). 64 covers any
-#: real batch; past it rounds CONTINUE until the undecided count fits
-#: ADMIT_DRIVER_MAX, and only then does the driver walk finish the
-#: tail — never an error: a deterministic raise under exactly-once
-#: replay would poison the batch forever (round-10 advice).
-GREEDY_DEPTH_MAX = 64
-
-#: Adaptive admit switch point (admit-input ids per micro-batch). Below
-#: it the gates run the driver walk — measured 11× faster than the
-#: distributed admit at 1M ids / 300k pairs (1.7s vs 19.1s, PERF.md
-#: round 10) with driver footprint ~100s of MB; above it the walk's
-#: collect becomes the one driver-MEMORY bound in the pipeline (10⁷
-#: ids ≈ GBs of driver heap), so the executor-side
-#: _greedy_admit_frames (provably the same survivor set,
-#: property-pinned) takes over. 2M = 2× the measured-comfortable
-#: point, still linear-small on the driver, far below the RSS cliff.
-#: Per-batch override: pass ``distributed_admit=True/False``; the
-#: None default reads the switch (the repo's regime-dependent-plan
-#: rule: adaptive changes ship behind a measured switch with both
-#: branches pinned equal).
+#: Driver-walk bound of the admit (undecided ids per micro-batch). The
+#: admit finishes every batch with the driver walk (_greedy_admit),
+#: measured 11× faster than executor-side rounds at 1M ids / 300k pairs
+#: (1.7s vs 19.1s, PERF.md round 10) with a driver footprint of ~100s
+#: of MB. The walk collects the undecided ids and their pairs, which is
+#: the one driver-MEMORY bound in the pipeline (10⁷ ids ≈ GBs of driver
+#: heap), so while more ids than this are undecided,
+#: _greedy_admit_frames decides them in executor-side rounds first.
+#: 2M = 2× the measured-comfortable point, still linear-small on the
+#: driver, far below the RSS cliff.
 ADMIT_DRIVER_MAX = 2_000_000
 
 #: Batch-sized-broadcast bound (rows of the BATCH side). The gates hint
@@ -135,98 +119,142 @@ def _maybe_broadcast(df: DataFrame, n_batch: int) -> DataFrame:
     return F.broadcast(df) if n_batch <= BATCH_BROADCAST_MAX else df
 
 
-def _greedy_admit_frames(
-    ids: DataFrame, flagged: DataFrame, pairs: DataFrame
-) -> DataFrame:
-    """EXECUTOR-SIDE first-arrival admit — computes exactly the set
-    _greedy_admit does (the lexicographically-first maximal independent
-    set of the batch conflict graph, minus index-flagged ids) without
-    collecting ids or pairs to the driver, for micro-batches past the
-    ≲10^6-doc driver-walk contract the gate docstrings name.
+def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager localCheckpoint of ``df`` and its row count. The count rides
+    the checkpoint job as an Observation metric instead of paying a
+    count job of its own (tests/test_plans.py pins that it is posted,
+    0 on empty input)."""
+    from pyspark.sql import Observation
 
-    Inputs: ``ids`` (id), ``flagged`` (id — near-dups the persisted
-    index, dropped outright), ``pairs`` (a, b with a < b — verified
-    within-batch near-dup edges). Iterative rounds, each one Spark job
-    over the (batch-bounded) state:
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return df, obs.get["n"]
+
+
+def _greedy_admit_frames(
+    ids: DataFrame, flagged: DataFrame, pairs: DataFrame, n_ids: int
+) -> DataFrame | None:
+    """First-arrival admit of one micro-batch: exactly the set
+    _greedy_admit computes (the lexicographically-first maximal
+    independent set of the batch conflict graph, minus index-flagged
+    ids), as a DataFrame of the admitted ids under the input id column
+    name, or None when the batch admits nothing.
+
+    Inputs: ``ids`` (id, ``n_ids`` rows), ``flagged`` (id — near-dups
+    the persisted index, dropped outright), ``pairs`` (a, b with a < b —
+    verified within-batch near-dup edges).
+
+    While more than ADMIT_DRIVER_MAX ids are undecided, executor-side
+    rounds decide them without collecting ids or pairs, each round a
+    few Spark jobs over the (batch-bounded) state:
 
     - ADMIT every undecided id none of whose smaller neighbors is
       still undecided or already admitted (its blockers all dropped);
     - then DROP every undecided id with an ADMITTED smaller neighbor.
 
-    The minimum undecided id is decided every round, and the round
-    count equals the dependency depth of the graph — 1 for cliques and
-    stars (the shape near-dup buckets take). Adversarial chains need
-    depth rounds, and an ALTERNATING chain decides only ~2 ids per
-    round, so after GREEDY_DEPTH_MAX rounds the undecided leftover can
-    still be nearly batch-sized (round-11 advice — the earlier
-    "depth-bounded small" claim was wrong). The driver-walk fallback is
-    therefore gated on the MEASURED leftover: rounds continue past
-    GREEDY_DEPTH_MAX until the undecided count is ≤ ADMIT_DRIVER_MAX
-    (each round decides ≥1 id, so this terminates), and only then does
-    the walk collect — the same driver-memory contract as the adaptive
-    admit switch. Leftover pairs reach the driver through JOINS against
-    the undecided/admitted frames (never a multi-million-term isin()
-    expression), so every collect is bounded by the undecided subgraph.
-    Never an error: a deterministic raise under exactly-once replay
-    would poison the batch forever (round-10 advice). Per-round state
-    is eagerly localCheckpoint'ed (the repo's iterative-plan lesson:
-    graph.py BFS collapsed 30 scans → 1 the same way). Returns a
-    DataFrame with the admitted ids under the input id column name."""
+    The minimum undecided id is decided every round, so the rounds
+    terminate; the undecided count is read off each round's checkpoint
+    job, never a count job of its own. Cliques and stars (the shape near-dup buckets take) are
+    decided in one round, but an alternating CHAIN a~b~c~d decides only
+    ~2 ids per round (round-11 advice). Per-round state is eagerly
+    localCheckpoint'ed (the repo's iterative-plan lesson: graph.py BFS
+    collapsed 30 scans → 1 the same way).
+
+    The driver walk then finishes the undecided rest. Only pairs BOTH
+    of whose endpoints are undecided can change it, and an undecided id
+    with an ADMITTED smaller neighbor is dropped like a flagged one.
+    Both are carved out by JOINS against the undecided/admitted frames
+    (an isin() over the id list would build a near-batch-sized IN
+    expression on the driver), so every collect is bounded by the
+    undecided subgraph. With no rounds the walk takes the whole batch
+    as it is: a flagged id is never admitted, so it never blocks a
+    neighbor, and its pairs need no carving. Never an error: a
+    deterministic raise under exactly-once replay would poison the
+    batch forever (round-10 advice). The round count is logged at INFO
+    (record attribute ``admit_rounds``)."""
     id_col = ids.columns[0]
-    und = ids.join(
-        flagged.toDF(id_col).distinct(), id_col, "left_anti"
-    ).localCheckpoint(eager=True)
-    # accumulator schema mirrors the input id column (round-10 advice:
-    # the hardcoded bigint broke non-bigint id streams)
-    adm = und.limit(0).localCheckpoint(eager=True)
-    pr = pairs.toDF("a", "b").localCheckpoint(eager=True)
+    adm = None
     rounds = 0
-    while True:
-        if und.isEmpty():
-            return adm
-        # driver-walk fallback only once the leftover provably fits the
-        # driver contract; above it keep deciding distributedly (≥1 id
-        # per round — terminates) instead of collecting a near-batch
-        # undecided set (round-11 advice)
-        if rounds >= GREEDY_DEPTH_MAX and und.count() <= ADMIT_DRIVER_MAX:
-            break
-        active_a = und.toDF("a").union(adm.toDF("a")).distinct()
-        blocked = pr.join(active_a, "a").select(F.col("b").alias(id_col)).distinct()
-        adm_new = und.join(blocked, id_col, "left_anti").localCheckpoint(eager=True)
-        adm = adm.union(adm_new).localCheckpoint(eager=True)
-        drop_new = (
-            pr.join(adm.toDF("a"), "a").select(F.col("b").alias(id_col)).distinct()
+    n_und = n_ids
+    if n_und > ADMIT_DRIVER_MAX:
+        und, n_und = _checkpoint_counted(
+            ids.join(flagged.toDF(id_col).distinct(), id_col, "left_anti")
         )
-        und = (
-            und.join(adm_new, id_col, "left_anti")
-            .join(drop_new, id_col, "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        rounds += 1
-    # Chain deeper than the bound: finish the leftover on the driver
-    # walk. Only pairs BOTH of whose endpoints are still undecided can
-    # change the outcome, except that an undecided id is also blocked
-    # by an already-ADMITTED smaller neighbor — fold those in as
-    # pre-flagged. Leftover pairs are carved out by JOINS against the
-    # undecided/admitted frames (an isin() over the id list would build
-    # a near-batch-sized IN expression on the driver — round-11
-    # advice), so each collect is bounded by the undecided subgraph.
-    und_b = und.toDF("b")
-    rel_b_und = pr.join(und_b, "b").localCheckpoint(eager=True)
-    pre_blocked = {
-        r.b for r in rel_b_und.join(adm.toDF("a"), "a").select("b").distinct().collect()
-    }
-    rel = [
-        (r.a, r.b) for r in rel_b_und.join(und.toDF("a"), "a").select("a", "b").collect()
-    ]
-    und_ids = sorted(r[0] for r in und.collect())
-    tail = _greedy_admit(und_ids, pre_blocked, rel)
-    spark = und.sparkSession
-    if tail:
-        adm = adm.union(
-            local_rows_df(spark, [(i,) for i in sorted(tail)], adm.schema)
-        )
-    return adm
+        # accumulator schema mirrors the input id column (round-10 advice:
+        # the hardcoded bigint broke non-bigint id streams)
+        adm = und.limit(0).localCheckpoint(eager=True)
+        pr = pairs.toDF("a", "b").localCheckpoint(eager=True)
+        while n_und > ADMIT_DRIVER_MAX:
+            active_a = und.toDF("a").union(adm.toDF("a")).distinct()
+            blocked = pr.join(active_a, "a").select(F.col("b").alias(id_col)).distinct()
+            adm_new = und.join(blocked, id_col, "left_anti").localCheckpoint(eager=True)
+            adm = adm.union(adm_new).localCheckpoint(eager=True)
+            drop_new = (
+                pr.join(adm.toDF("a"), "a").select(F.col("b").alias(id_col)).distinct()
+            )
+            und, n_und = _checkpoint_counted(
+                und.join(adm_new, id_col, "left_anti").join(
+                    drop_new, id_col, "left_anti"
+                )
+            )
+            rounds += 1
+    kept: set = set()
+    if n_und:
+        if adm is not None:  # the walk takes the undecided subgraph only
+            rel_b_und = pr.join(und.toDF("b"), "b").localCheckpoint(eager=True)
+            ids = und
+            flagged = rel_b_und.join(adm.toDF("a"), "a").select("b").distinct()
+            pairs = rel_b_und.join(und.toDF("a"), "a").select("a", "b")
+        blocked_ids = {r[0] for r in flagged.collect()}
+        walk_pairs = [(r[0], r[1]) for r in pairs.collect()]
+        kept = _greedy_admit((r[0] for r in ids.collect()), blocked_ids, walk_pairs)
+    _LOG.info(
+        "greedy admit: %d executor-side round(s), driver walk over %d id(s)",
+        rounds,
+        n_und,
+        extra={"admit_rounds": rounds},
+    )
+    if not kept:
+        return adm if rounds else None
+    # literal JVM relation: the createDataFrame form re-ran a Python-RDD
+    # scan in EACH of the gate's index/sink joins (functions.local_rows_df)
+    walk = local_rows_df(ids.sparkSession, [(i,) for i in sorted(kept)], ids.schema)
+    return walk if adm is None else adm.union(walk)
+
+
+def _admit_and_append(
+    ids: DataFrame,
+    flagged: DataFrame,
+    pairs: DataFrame,
+    n_batch: int,
+    appends: list,
+) -> None:
+    """The shared tail of both near-dup gates: admit the batch's first
+    arrivals (_greedy_admit_frames), then append each ``(frame, path)``
+    of ``appends`` joined to the survivors on the id column, in order.
+    Callers list index rows FIRST and survivor rows last, so the index
+    covers every doc the sink may contain at every crash point (see
+    _minhash_gate_batch)."""
+    surv = _greedy_admit_frames(ids, flagged, pairs, n_batch)
+    if surv is None:
+        return
+    surv_b = _maybe_broadcast(surv, n_batch)
+    for frame, path in appends:
+        frame.join(surv_b, ids.columns[0]).write.mode("append").parquet(path)
+
+
+def _start_foreach_batch(
+    stream: DataFrame, checkpoint_path: str, processing_time: str | None, body
+):
+    """Start ``stream`` in append mode with ``body(batch)`` as its
+    foreachBatch sink; ``processing_time`` (e.g. '5 seconds') sets the
+    trigger interval. Returns the started StreamingQuery."""
+    w = stream.writeStream.outputMode("append").option(
+        "checkpointLocation", checkpoint_path
+    )
+    if processing_time is not None:
+        w = w.trigger(processingTime=processing_time)
+    return w.foreachBatch(lambda b, _id: body(b)).start()
 
 
 def build_minhash_index(docs: DataFrame, path: str) -> None:
@@ -250,7 +278,6 @@ def _minhash_gate_batch(
     batch: DataFrame,
     index_path: str,
     survivors_path: str,
-    distributed_admit: bool | None = None,
 ) -> None:
     """One micro-batch through the online near-dup gate (the foreachBatch
     body of stream_dedup_minhash):
@@ -265,11 +292,11 @@ def _minhash_gate_batch(
        (batch-sized, trivially small);
     4. both candidate sets are verified with the shared exact-Jaccard
        rule (minhash_verified_pairs — 'near-dup' means one thing
-       repo-wide), then a driver-side greedy over the batch's ids in
-       ascending order keeps a doc unless it near-dups the index or an
-       already-kept doc of the same batch. The collected relations are
-       batch-bounded (flag set ≤ |batch|, pair list ≤ |batch| choose 2
-       post-LSH), never corpus-bounded;
+       repo-wide), then the greedy admit (_greedy_admit_frames) keeps
+       the batch's docs in ascending id order unless a doc near-dups
+       the index or an already-kept doc of the same batch. Its
+       relations are batch-bounded (flag set ≤ |batch|, pair list ≤
+       |batch| choose 2 post-LSH), never corpus-bounded;
     5. survivors' rows are appended to the survivor sink and their
        bands + shingles appended to the index, so later batches (and
        restarts) dedup against them — first-arrival-wins across the
@@ -304,8 +331,6 @@ def _minhash_gate_batch(
     n_batch = per_doc.count()
     if n_batch == 0:
         return
-    if distributed_admit is None:  # adaptive: see ADMIT_DRIVER_MAX
-        distributed_admit = n_batch > ADMIT_DRIVER_MAX
     sig = per_doc.select("doc_id", F.posexplode("mh").alias("i", "mh"))
     new_bands = minhash_bands(sig).localCheckpoint(eager=True)
     new_sh = per_doc.select("doc_id", "sh")
@@ -358,39 +383,16 @@ def _minhash_gate_batch(
         .distinct()
     )
     in_pairs_df = minhash_verified_pairs(cand_in, new_sh).select("doc_a", "doc_b")
-    if distributed_admit:
-        surv_ids = _greedy_admit_frames(
-            per_doc.select("doc_id"), flagged_df, in_pairs_df
-        )
-        if surv_ids.isEmpty():
-            return
-    else:
-        flagged = {r.doc_new for r in flagged_df.collect()}
-        in_pairs = [(r.doc_a, r.doc_b) for r in in_pairs_df.collect()]
-        kept = _greedy_admit(
-            (r.doc_id for r in per_doc.select("doc_id").collect()),
-            flagged,
-            in_pairs,
-        )
-        if not kept:
-            return
-        # literal JVM relation: the createDataFrame form re-ran a
-        # Python-RDD scan in EACH of the three per-batch index/sink
-        # joins below (functions.local_rows_df)
-        surv_ids = local_rows_df(
-            spark, [(i,) for i in sorted(kept)], "doc_id bigint"
-        )
-    # index rows FIRST, survivors last (see docstring: the index must
-    # cover every doc the sink may contain at every crash point)
-    surv_b = _maybe_broadcast(surv_ids, n_batch)
-    new_bands.join(surv_b, "doc_id").write.mode("append").parquet(
-        f"{index_path}/bands"
-    )
-    new_sh.join(surv_b, "doc_id").write.mode("append").parquet(
-        f"{index_path}/shingles"
-    )
-    batch.join(surv_b, "doc_id").write.mode("append").parquet(
-        survivors_path
+    _admit_and_append(
+        per_doc.select("doc_id"),
+        flagged_df,
+        in_pairs_df,
+        n_batch,
+        [
+            (new_bands, f"{index_path}/bands"),
+            (new_sh, f"{index_path}/shingles"),
+            (batch, survivors_path),
+        ],
     )
 
 
@@ -400,7 +402,6 @@ def stream_dedup_minhash(
     survivors_path: str,
     checkpoint_path: str,
     processing_time: str | None = None,
-    distributed_admit: bool | None = None,
 ):
     """ONLINE near-dup gate on a document stream — the streaming half of
     the batch MinHash-LSH family, and the piece a 100 TB/day crawl
@@ -419,30 +420,23 @@ def stream_dedup_minhash(
     gate pays a fixed per-batch cost (index probe + greedy + appends),
     so larger micro-batches amortize it.
 
-    Micro-batch size contract: the greedy admit collects the batch's
-    doc_ids and verified pairs to the driver — first-arrival-wins is
-    inherently sequential, and the collects are batch-bounded (ids ≤
-    |batch|, pairs ≤ post-LSH candidates), never corpus-bounded. The
-    driver therefore does O(|batch| + pairs) Python work per trigger.
-    The admit path is ADAPTIVE (round-10 verdict ask): with the
-    ``distributed_admit=None`` default, batches up to ADMIT_DRIVER_MAX
-    admit-input ids run the driver walk (measured 11× faster locally),
-    and larger batches switch to the executor-side lexicographic-MIS
-    of _greedy_admit_frames (provably the same survivor set,
-    property-pinned), which never collects ids or pairs — removing the
-    driver MEMORY bound at 10⁷-row micro-batches. Pass True/False to
-    pin a branch (the distributed path is a memory-bound remover, not
-    a local speedup: 19.1s vs the walk's 1.7s at 1M ids, PERF.md)."""
-    w = docs.writeStream.outputMode("append").option(
-        "checkpointLocation", checkpoint_path
+    Micro-batch size contract: first-arrival-wins is inherently
+    sequential, so the greedy admit ends with a driver walk over the
+    undecided doc_ids and their verified pairs — batch-bounded (ids ≤
+    |batch|, pairs ≤ post-LSH candidates), never corpus-bounded,
+    O(ids + pairs) Python work per trigger. The batch size picks how
+    much is left to the walk (round-10 verdict ask): while more than
+    ADMIT_DRIVER_MAX ids are undecided, executor-side rounds of
+    _greedy_admit_frames decide them first (the same survivor set,
+    property-pinned), which removes the driver MEMORY bound at
+    10⁷-row micro-batches. The rounds are a memory-bound remover, not
+    a local speedup: 19.1s vs the walk's 1.7s at 1M ids, PERF.md."""
+    return _start_foreach_batch(
+        docs,
+        checkpoint_path,
+        processing_time,
+        lambda b: _minhash_gate_batch(b, index_path, survivors_path),
     )
-    if processing_time is not None:
-        w = w.trigger(processingTime=processing_time)
-    return w.foreachBatch(
-        lambda b, _id: _minhash_gate_batch(
-            b, index_path, survivors_path, distributed_admit
-        )
-    ).start()
 
 
 #: Sub-banding caps for the SRP gate's band-candidate joins. A 4-bit
@@ -556,16 +550,6 @@ SRP_PRESCREEN_GUARD = 1e-9
 #: capped joins each call, logged at WARNING when any bucket widened.
 #: {"self": {"buckets": n, "rows": n}, "probe": {"buckets": n, "rows": n}}
 SRP_WIDEN_LAST: dict = {}
-
-#: Pre-screen split observability (round 14, PROBE-ONLY): when the
-#: SRP_PRESCREEN_DEBUG env var is set, _prescreened_flags records
-#: {"cand_pairs", "certain_pairs", "margin_pairs", "margin_true"} for
-#: the last batch — the certain/margin geometry the round-13 verdict
-#: asked to measure in a selective regime. Counting forces extra
-#: actions over the deliberately-lazy pair-cardinality relation, so it
-#: is strictly opt-in; the production gate never pays it.
-SRP_PRESCREEN_LAST: dict = {}
-
 
 def _note_widen(kind: str, buckets: int, rows: int) -> None:
     SRP_WIDEN_LAST[kind] = {"buckets": buckets, "rows": rows}
@@ -959,18 +943,6 @@ def _prescreened_flags(
         .filter(F.col("cosine") >= COSINE_THETA)
         .select("vec_new")
     )
-    if os.environ.get("SRP_PRESCREEN_DEBUG"):
-        # probe-only split accounting (SRP_PRESCREEN_LAST doc) — extra
-        # actions over the lazy `scored`, never taken in production
-        SRP_PRESCREEN_LAST.clear()
-        SRP_PRESCREEN_LAST.update(
-            {
-                "cand_pairs": scored.count(),
-                "certain_pairs": certain.count(),
-                "margin_pairs": margin.count(),
-                "margin_true": verified.count(),
-            }
-        )
     return certain.union(verified).distinct()
 
 
@@ -980,7 +952,6 @@ def _srp_gate_batch(
     survivors_path: str,
     clique_cap: int | None = SRP_CLIQUE_CAP,
     probe_cap: int | None = SRP_PROBE_CAP,
-    distributed_admit: bool | None = None,
     prescreen: bool = True,
 ) -> None:
     """One micro-batch through the online EMBEDDING near-dup gate —
@@ -1013,8 +984,6 @@ def _srp_gate_batch(
     n_batch = vecs.count()
     if n_batch == 0:
         return
-    if distributed_admit is None:  # adaptive: see ADMIT_DRIVER_MAX
-        distributed_admit = n_batch > ADMIT_DRIVER_MAX
     sigs = srp_band_signatures(
         vecs, "vec_id", "embedding", SRP_BAND_BITS, SRP_BANDS
     ).localCheckpoint(eager=True)
@@ -1131,34 +1100,16 @@ def _srp_gate_batch(
         .filter(F.col("cosine") >= COSINE_THETA)
         .select("vec_a", "vec_b")
     )
-    if distributed_admit:
-        surv_ids = _greedy_admit_frames(
-            vecs.select("vec_id"), flagged_df, in_pairs_df
-        )
-        if surv_ids.isEmpty():
-            return
-    else:
-        flagged = {r.vec_new for r in flagged_df.collect()}
-        in_pairs = [(r.vec_a, r.vec_b) for r in in_pairs_df.collect()]
-        kept = _greedy_admit(
-            (r.vec_id for r in vecs.select("vec_id").collect()), flagged, in_pairs
-        )
-        if not kept:
-            return
-        surv_ids = local_rows_df(
-            spark, [(i,) for i in sorted(kept)], "vec_id bigint"
-        )
-    # index rows FIRST, survivors last (crash-containment: the index
-    # must cover every vector the sink may contain)
-    surv_b = _maybe_broadcast(surv_ids, n_batch)
-    new_bands.join(surv_b, "vec_id").write.mode("append").parquet(
-        f"{index_path}/bands"
-    )
-    vecs.join(surv_b, "vec_id").write.mode("append").parquet(
-        f"{index_path}/vectors"
-    )
-    batch.join(surv_b, "vec_id").write.mode("append").parquet(
-        survivors_path
+    _admit_and_append(
+        vecs.select("vec_id"),
+        flagged_df,
+        in_pairs_df,
+        n_batch,
+        [
+            (new_bands, f"{index_path}/bands"),
+            (vecs, f"{index_path}/vectors"),
+            (batch, survivors_path),
+        ],
     )
 
 
@@ -1170,7 +1121,6 @@ def stream_dedup_srp(
     processing_time: str | None = None,
     clique_cap: int | None = SRP_CLIQUE_CAP,
     probe_cap: int | None = SRP_PROBE_CAP,
-    distributed_admit: bool | None = None,
 ):
     """ONLINE embedding near-dup gate on a vector stream — the
     streaming half of the dedup_embedding_srp family, completing the
@@ -1200,20 +1150,17 @@ def stream_dedup_srp(
     fixture of PERF.md's round-9 "Streaming EMBEDDING gate probe" and
     round-10 caps table) dial the caps DOWN
     instead (measured: 16/256 lifts the uniform fixture from ~360 to
-    ~3.4k vecs/s at 128k-vec batches). Same adaptive admit contract as
-    stream_dedup_minhash: ``distributed_admit=None`` switches to the
-    executor-side admit past ADMIT_DRIVER_MAX admit-input ids
-    (property-pinned same survivor set); True/False pins a branch."""
-    w = vecs.writeStream.outputMode("append").option(
-        "checkpointLocation", checkpoint_path
+    ~3.4k vecs/s at 128k-vec batches). Same admit as
+    stream_dedup_minhash: executor-side rounds only while more than
+    ADMIT_DRIVER_MAX ids are undecided, then the driver walk."""
+    return _start_foreach_batch(
+        vecs,
+        checkpoint_path,
+        processing_time,
+        lambda b: _srp_gate_batch(
+            b, index_path, survivors_path, clique_cap, probe_cap
+        ),
     )
-    if processing_time is not None:
-        w = w.trigger(processingTime=processing_time)
-    return w.foreachBatch(
-        lambda b, _id: _srp_gate_batch(
-            b, index_path, survivors_path, clique_cap, probe_cap, distributed_admit
-        )
-    ).start()
 
 
 class StreamingTables:
@@ -1366,7 +1313,7 @@ def stream_sample_bottomk(
     if k is None:
         k = SAMPLE_FIXED_K
 
-    def merge_batch(batch: DataFrame, _batch_id: int) -> None:
+    def merge_batch(batch: DataFrame) -> None:
         from pyspark.sql import Window
 
         spark = batch.sparkSession
@@ -1409,9 +1356,4 @@ def stream_sample_bottomk(
             if name.startswith("v") and name[1:].isdigit() and int(name[1:]) < nxt:
                 fs.delete(st.getPath(), True)
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(merge_batch)
-        .start()
-    )
+    return _start_foreach_batch(docs, checkpoint_path, None, merge_batch)

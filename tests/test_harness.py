@@ -113,6 +113,29 @@ def test_tool_imports_resolve():
     assert missing == []
 
 
+def test_package_reads_environment_only_in_session():
+    """The engine's behaviour is set by its arguments and module
+    constants; the environment is read in one place, session.py (CPU
+    count and shuffle width). No other package module may read
+    ``os.environ`` or call ``getenv``, so no hidden switch (a probe-only
+    debug flag, say) can change what a query or gate does."""
+    pkg = REPO / "realtimevotingdataengineer_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "session.py" and path.parent == pkg:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = (
+                node.attr if isinstance(node, ast.Attribute)
+                else node.id if isinstance(node, ast.Name)
+                else node.name if isinstance(node, ast.alias)
+                else None
+            )
+            if name in ("environ", "getenv", "environb", "getenvb"):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert offenders == []
+
+
 def test_time_keys_records_errors_without_aborting(spark, sf_dir, monkeypatch):
     """bench.time_keys (the one timing loop behind bench.py, bench_drift
     and profile_key) returns a (construct, execute) pair per rep for a

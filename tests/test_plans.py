@@ -404,6 +404,36 @@ def test_shuffle_width_conf_rejects_auto(spark):
     assert shuffle_width(spark) == int(before)
 
 
+def test_observe_posts_metrics_from_eager_local_checkpoint(spark):
+    """The iterative operators (connected_components, deep BFS, bucketed
+    dedup) and the streaming admit read row counts off an eager
+    localCheckpoint through ``observe`` instead of a job of their own.
+    ``Observation.get`` blocks until Spark posts the metrics and has no
+    timeout, so it is waited on a daemon thread joined for 60 s: a Spark
+    that stops posting them fails here instead of hanging. Empty input
+    posts too: count 0, and the None sum that connected_components
+    reads as "no label changed"."""
+    import threading
+
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    def observed(df):
+        obs = Observation()
+        df.observe(
+            obs, F.count(F.lit(1)).alias("n"), F.sum("id").alias("s")
+        ).localCheckpoint(eager=True)
+        got = {}
+        waiter = threading.Thread(target=lambda: got.update(obs.get), daemon=True)
+        waiter.start()
+        waiter.join(60)
+        assert not waiter.is_alive(), "no observed metrics 60 s after the checkpoint"
+        return got
+
+    assert observed(spark.range(10)) == {"n": 10, "s": 45}
+    assert observed(spark.range(10).filter("id < 0")) == {"n": 0, "s": None}
+
+
 def test_knn_arrow_topk_inside_kernel_no_window(t):
     """sim_knn_graph_arrow does its per-src top-k INSIDE the BLAS kernel,
     so the plan must contain the grouped-map node and NO window operator

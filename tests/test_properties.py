@@ -674,25 +674,18 @@ def test_greedy_admit_frames_matches_python_greedy(spark, g):
         [(i,) for i in sorted(flagged)], "doc_id bigint"
     )
     pr_df = spark.createDataFrame(pairs or [], "a bigint, b bigint")
-    got = {
-        r.doc_id
-        for r in corpus._greedy_admit_frames(ids_df, fl_df, pr_df).collect()
-    }
-    assert got == want
-    # round 11: the same arbitrary graph must ALSO survive the
-    # driver-walk FALLBACK path (round bound patched to 2, so any
-    # example with dependency depth > 2 finishes on the fallback) —
-    # the poison-batch fix may not change a single survivor
-    depth_max = corpus.GREEDY_DEPTH_MAX
-    corpus.GREEDY_DEPTH_MAX = 2
+    # every ADMIT_DRIVER_MAX regime: executor-side rounds for every id
+    # (0), rounds then the driver walk over the undecided rest (n // 2),
+    # the driver walk alone (n) — none may change a single survivor
+    saved = corpus.ADMIT_DRIVER_MAX
     try:
-        got2 = {
-            r.doc_id
-            for r in corpus._greedy_admit_frames(ids_df, fl_df, pr_df).collect()
-        }
+        for threshold in (0, n // 2, n):
+            corpus.ADMIT_DRIVER_MAX = threshold
+            adm = corpus._greedy_admit_frames(ids_df, fl_df, pr_df, n)
+            got = set() if adm is None else {r.doc_id for r in adm.collect()}
+            assert got == want, threshold
     finally:
-        corpus.GREEDY_DEPTH_MAX = depth_max
-    assert got2 == want
+        corpus.ADMIT_DRIVER_MAX = saved
 
 
 hash_corpus_strategy = st.lists(

@@ -8,6 +8,7 @@ late events, and a malformed line.
 
 from __future__ import annotations
 
+import functools
 import json
 import time
 
@@ -398,6 +399,49 @@ def test_dedup_state_outlives_the_watermark(spark, tmp_path):
     assert state["numRowsDroppedByWatermark"] == 1
 
 
+def test_live_tally_counts_late_first_votes(spark, tmp_path):
+    """The live tally counts every voter's first vote however late it
+    arrives, as the reference's Postgres tally did: the aggregate reads
+    no voting_time, so its projection is pushed below the one-vote
+    dedup and no row is late there. Same three files as
+    test_dedup_state_outlives_the_watermark, where dedup_one_vote alone
+    drops voter 21's late vote; here it is counted (22 votes: voters
+    0-21, voter 0's re-vote suppressed) and neither state operator
+    drops a row by the watermark."""
+    src = tmp_path / "votes"
+    src.mkdir()
+    first = [_vote_line(v, 0) for v in range(10)]
+    later = [_vote_line(v, 7200) for v in range(10, 20)]  # watermark -> 1h50m
+    last = [_vote_line(0, 7200), _vote_line(20, 7200), _vote_line(21, 0)]
+    raw = pipeline.read_text_stream(spark, str(src), max_files_per_trigger=1)
+    tally = pipeline.tally_per_candidate(
+        pipeline.dedup_one_vote(pipeline.parse_vote_events(raw))
+    )
+    q = sinks.write_memory(tally, "late_vote_tally", "complete")
+    try:
+        for i, lines in enumerate([first, later, last]):
+            _write_vote_file(src / f"votes-{i}.jsonl", lines)
+            q.processAllAvailable()
+        progress = [p for p in q.recentProgress if p["numInputRows"]]
+    finally:
+        q.stop()
+    totals = {
+        r.candidate_id: r.total_votes
+        for r in spark.sql("SELECT * FROM late_vote_tally").collect()
+    }
+    want: dict[str, int] = {}
+    for v in range(22):
+        want[f"cand-{v % 3}"] = want.get(f"cand-{v % 3}", 0) + 1
+    assert totals == want and sum(totals.values()) == 22
+    ops = progress[-1]["stateOperators"]
+    assert len(ops) == 2
+    assert all(
+        op["numRowsDroppedByWatermark"] == 0
+        for p in progress
+        for op in p["stateOperators"]
+    )
+
+
 def test_stream_dedup_exact_matches_batch_groups(spark, sf_dir, tmp_path):
     """streaming/corpus.py::stream_dedup_exact — the online content
     filter must agree with the batch dedup pass at the GROUP level: one
@@ -576,13 +620,29 @@ def test_stream_dedup_minhash_matches_batch_greedy(spark, sf_dir, tmp_path):
     assert len(kept) < len(delta_ids)  # the gate actually dropped docs
 
 
+def _admitted(corpus, ids_df, fl_df, pr_df, n, threshold):
+    """Survivor ids of _greedy_admit_frames over an ``n``-id batch with
+    ADMIT_DRIVER_MAX at ``threshold``: 0 decides every id in
+    executor-side rounds, a middle value runs rounds and then the
+    driver walk, and ``n`` or more runs the driver walk alone."""
+    saved = corpus.ADMIT_DRIVER_MAX
+    corpus.ADMIT_DRIVER_MAX = threshold
+    try:
+        got = corpus._greedy_admit_frames(ids_df, fl_df, pr_df, n)
+        return set() if got is None else {r[0] for r in got.collect()}
+    finally:
+        corpus.ADMIT_DRIVER_MAX = saved
+
+
 def test_greedy_admit_frames_equals_driver_walk(spark):
     """_greedy_admit_frames must compute EXACTLY _greedy_admit's set —
     the lexicographically-first maximal independent set minus flagged —
-    on shapes that stress every code path: cliques and stars (one
-    round), an alternating CHAIN a~b~c~d (the multi-round dependency
-    case: a,c survive because b drops), flagged roots (a flagged
-    minimum must NOT block its neighbors), and seeded random graphs."""
+    at every ADMIT_DRIVER_MAX regime (all rounds, rounds then the walk,
+    walk only) on shapes that stress every code path: cliques and stars
+    (one round), an alternating CHAIN a~b~c~d (the multi-round
+    dependency case: a,c survive because b drops), flagged roots (a
+    flagged minimum must NOT block its neighbors), and seeded random
+    graphs."""
     import random
 
     from realtimevotingdataengineer_spark.streaming import corpus
@@ -618,65 +678,41 @@ def test_greedy_admit_frames_equals_driver_walk(spark):
         )
         if not pairs:
             pr_df = pr_df.filter("a IS NOT NULL")
-        got = {
-            r.doc_id
-            for r in corpus._greedy_admit_frames(ids_df, fl_df, pr_df).collect()
-        }
-        assert got == want, (sorted(flagged), pairs)
+        n = len(ids)
+        for threshold in (0, n // 2, n):
+            got = _admitted(corpus, ids_df, fl_df, pr_df, n, threshold)
+            assert got == want, (threshold, sorted(flagged), pairs)
     # sanity on the chain case specifically (multi-round dependency)
     assert corpus._greedy_admit(range(4), set(), [(0, 1), (1, 2), (2, 3)]) == {0, 2}
 
 
-def test_greedy_admit_frames_deep_chain_falls_back_not_raises(
-    spark, monkeypatch
-):
-    """Round-11 regression (round-10 advice): a conflict chain deeper
-    than GREEDY_DEPTH_MAX must FINISH (driver-walk fallback over the
-    undecided leftover), not raise — under exactly-once replay a
-    deterministic raise is a permanent poison batch. Bound patched low
-    so the fallback path actually runs; result must still equal the
-    pure driver walk (evens survive an alternating chain)."""
+def test_greedy_admit_frames_deep_chain_falls_back_not_raises(spark, caplog):
+    """Round-11 regression (round-10 advice): a conflict chain that
+    executor-side rounds decide only ~2 ids at a time must FINISH —
+    rounds until the undecided rest fits ADMIT_DRIVER_MAX, then the
+    driver walk over it — not raise: under exactly-once replay a
+    deterministic raise is a permanent poison batch. Every regime must
+    equal the pure driver walk (the odd ids survive an alternating
+    chain with a flagged root), and the middle threshold must really
+    run both rounds and the walk."""
+    import logging
+
     from realtimevotingdataengineer_spark.streaming import corpus
 
-    monkeypatch.setattr(corpus, "GREEDY_DEPTH_MAX", 3)
     n = 24
-    pairs = [(i, i + 1) for i in range(n - 1)]  # depth ~ n/2 >> 3
+    pairs = [(i, i + 1) for i in range(n - 1)]  # depth ~ n/2
     want = corpus._greedy_admit(range(n), {0}, pairs)
     ids_df = spark.createDataFrame([(i,) for i in range(n)], "doc_id bigint")
     fl_df = spark.createDataFrame([(0,)], "doc_id bigint")
     pr_df = spark.createDataFrame(pairs, "a bigint, b bigint")
-    got = {
-        r.doc_id
-        for r in corpus._greedy_admit_frames(ids_df, fl_df, pr_df).collect()
-    }
-    assert got == want
-
-
-def test_minhash_gate_distributed_admit_equals_driver(spark, sf_dir, tmp_path):
-    """The executor-side admit is a drop-in: run the SAME two
-    micro-batches through _minhash_gate_batch twice — driver walk vs
-    distributed_admit — against separate index/sink dirs and require
-    identical survivor sets (and that docs were actually dropped, so
-    the admit logic was exercised, not bypassed)."""
-    from pyspark.sql import functions as F
-
-    from realtimevotingdataengineer_spark.sources.tables import load_table
-    from realtimevotingdataengineer_spark.streaming import corpus
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    mx = docs.agg(F.max("doc_id")).collect()[0][0]
-    cut = (mx + 1) * 4 // 5
-    base = docs.filter(F.col("doc_id") < cut)
-    b1 = docs.filter(F.col("doc_id") >= cut).localCheckpoint(eager=True)
-    survs = {}
-    for mode, dist in [("driver", False), ("dist", True)]:
-        idx = str(tmp_path / f"idx_{mode}")
-        surv = str(tmp_path / f"surv_{mode}")
-        corpus.build_minhash_index(base, idx)
-        corpus._minhash_gate_batch(b1, idx, surv, distributed_admit=dist)
-        survs[mode] = {r.doc_id for r in spark.read.parquet(surv).collect()}
-    assert survs["driver"] == survs["dist"]
-    assert 0 < len(survs["dist"]) < b1.count()
+    caplog.set_level(logging.INFO, logger=corpus.__name__)
+    for threshold, rounds_ran in [(0, True), (n // 2, True), (n, False)]:
+        caplog.clear()
+        assert _admitted(corpus, ids_df, fl_df, pr_df, n, threshold) == want
+        (rec,) = [r for r in caplog.records if hasattr(r, "admit_rounds")]
+        assert (rec.admit_rounds > 0) == rounds_ran, threshold
+        # the walk finishes every id left undecided by the rounds
+        assert (rec.args[1] > 0) == (threshold > 0), threshold
 
 
 def test_stream_dedup_minhash_cross_batch_survivor_indexed(spark, tmp_path):
@@ -1483,47 +1519,107 @@ def test_bottomk_migration_crash_resume_commits_success_last(
     assert corpus._latest_state_version(spark, st2) == 0
 
 
-def test_minhash_gate_adaptive_admit_switches_on_batch_size(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Round-10 verdict ask #1: with distributed_admit=None the gate
-    must pick the admit branch from the MEASURED batch size against
-    ADMIT_DRIVER_MAX — driver walk below, executor-side above — and
-    both runs must produce the identical survivor set (the property the
-    switch rests on). The distributed branch is proven taken by
-    patching the threshold below the batch size and spying the call."""
-    from pyspark.sql import functions as F
+def _gate_specs(corpus):
+    """(table, id column, payload column, index builder, gate body) for
+    both streaming near-dup gates."""
+    return [
+        ("documents", "doc_id", "text", corpus.build_minhash_index,
+         corpus._minhash_gate_batch),
+        ("embeddings", "vec_id", "embedding", corpus.build_srp_stream_index,
+         corpus._srp_gate_batch),
+    ]
 
+
+def _gate_split(spark, sf_dir, table, id_col, payload):
+    """The top fifth of ``table``'s ids as one checkpointed micro-batch,
+    and the rest as the index base."""
     from realtimevotingdataengineer_spark.sources.tables import load_table
+
+    rows = load_table(spark, sf_dir, table).select(id_col, payload)
+    mx = rows.agg(F.max(id_col)).collect()[0][0]
+    cut = (mx + 1) * 4 // 5
+    base = rows.filter(F.col(id_col) < cut)
+    return base, rows.filter(F.col(id_col) >= cut).localCheckpoint(eager=True)
+
+
+def _gate_run(spark, corpus, monkeypatch, caplog, tmp_path, spec, base, batch,
+              name, threshold):
+    """Build a fresh index from ``base``, run ``batch`` through the gate
+    with ADMIT_DRIVER_MAX = ``threshold``, and return the admit's INFO
+    log record (``admit_rounds``; ``args[1]`` is the ids the driver walk
+    took) and the survivor id set."""
+    table, id_col, _, build, gate = spec
+    monkeypatch.setattr(corpus, "ADMIT_DRIVER_MAX", threshold)
+    idx = str(tmp_path / f"{table}_{name}_idx")
+    surv = str(tmp_path / f"{table}_{name}_surv")
+    build(base, idx)
+    caplog.clear()
+    gate(batch, idx, surv)
+    (rec,) = [r for r in caplog.records if hasattr(r, "admit_rounds")]
+    got = {r[0] for r in spark.read.parquet(surv).select(id_col).collect()}
+    return rec, got
+
+
+def test_minhash_gate_distributed_admit_equals_driver(
+    spark, sf_dir, tmp_path, monkeypatch, caplog
+):
+    """The executor-side admit rounds are a drop-in for the driver walk
+    at gate level: the SAME MinHash micro-batch, run at the default
+    threshold (driver walk only) and at half the batch size (rounds
+    while more than half the ids are undecided, then the walk over any
+    left; near-dup buckets are cliques, so one round decides them all
+    here), against separate index/sink dirs, must give identical
+    survivor sets — and docs must actually be dropped, so the admit
+    logic was exercised, not bypassed."""
+    import logging
+
     from realtimevotingdataengineer_spark.streaming import corpus
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    mx = docs.agg(F.max("doc_id")).collect()[0][0]
-    cut = (mx + 1) * 4 // 5
-    base = docs.filter(F.col("doc_id") < cut)
-    batch = docs.filter(F.col("doc_id") >= cut)
-    calls: list = []
-    real = corpus._greedy_admit_frames
+    caplog.set_level(logging.INFO, logger=corpus.__name__)
+    spec = _gate_specs(corpus)[0]
+    base, batch = _gate_split(spark, sf_dir, *spec[:3])
+    n = batch.count()
+    run = functools.partial(
+        _gate_run, spark, corpus, monkeypatch, caplog, tmp_path, spec, base, batch
+    )
+    walk_rec, walk = run("walk", corpus.ADMIT_DRIVER_MAX)
+    mid_rec, mid = run("mid", n // 2)
+    assert walk_rec.admit_rounds == 0
+    assert mid_rec.admit_rounds > 0
+    assert walk == mid
+    assert 0 < len(walk) < n
 
-    def spy(ids, flagged, pairs):
-        calls.append(1)
-        return real(ids, flagged, pairs)
 
-    monkeypatch.setattr(corpus, "_greedy_admit_frames", spy)
+def test_minhash_gate_adaptive_admit_switches_on_batch_size(
+    spark, sf_dir, tmp_path, monkeypatch, caplog
+):
+    """Round-10 verdict ask #1, for both near-dup gates: the batch size
+    against ADMIT_DRIVER_MAX picks whether executor-side admit rounds
+    run — none at the default threshold (driver walk only), rounds for
+    every id with the threshold patched to 0 — and both runs must
+    produce the identical, non-empty survivor set, with docs actually
+    dropped (the property the switch rests on; the admit logic was
+    exercised, not bypassed). The rounds are read from the admit's
+    INFO log record, not inferred."""
+    import logging
 
-    def run(name, threshold):
-        monkeypatch.setattr(corpus, "ADMIT_DRIVER_MAX", threshold)
-        idx = str(tmp_path / f"{name}_idx")
-        corpus.build_minhash_index(base, idx)
-        surv = str(tmp_path / f"{name}_surv")
-        corpus._minhash_gate_batch(batch, idx, surv)  # adaptive default
-        return {r.doc_id for r in spark.read.parquet(surv).collect()}
+    from realtimevotingdataengineer_spark.streaming import corpus
 
-    walk = run("walk", 10**9)  # far above batch size -> driver walk
-    assert calls == []
-    dist = run("dist", 1)  # far below -> distributed branch
-    assert calls == [1]
-    assert walk == dist and walk
+    caplog.set_level(logging.INFO, logger=corpus.__name__)
+    default = corpus.ADMIT_DRIVER_MAX
+    for spec in _gate_specs(corpus):
+        table = spec[0]
+        base, batch = _gate_split(spark, sf_dir, *spec[:3])
+        run = functools.partial(
+            _gate_run, spark, corpus, monkeypatch, caplog, tmp_path, spec, base,
+            batch,
+        )
+        walk_rec, walk = run("walk", default)
+        rounds_rec, rounds = run("rounds", 0)
+        assert walk_rec.admit_rounds == 0, table
+        assert rounds_rec.admit_rounds > 0, table
+        assert walk == rounds, table
+        assert 0 < len(walk) < batch.count(), table
 
 
 def test_srp_gate_prescreen_lossless(spark, sf_dir, tmp_path):

@@ -1,12 +1,12 @@
-"""Admit-path switch sweep (round-10 verdict ask #1): drive ONE
-micro-batch of size N through the SRP gate's foreachBatch body
-(_srp_gate_batch) for a ladder of Ns straddling ADMIT_DRIVER_MAX, with
-the ADAPTIVE default (distributed_admit=None), recording per-size wall
-time, the branch the switch chose, and driver RSS (/proc VmRSS) after
-each batch — the evidence that (a) the switch actually flips at the
-threshold and (b) the default path's driver memory stays FLAT through
-batches ≥2× the threshold (the executor-side admit never collects ids
-or pairs).
+"""Admit switch sweep (round-10 verdict ask #1): drive ONE micro-batch
+of size N through the SRP gate's foreachBatch body (_srp_gate_batch)
+for a ladder of Ns straddling ADMIT_DRIVER_MAX, recording per-size wall
+time, the executor-side admit rounds the batch ran (read off the
+admit's INFO log record), and driver RSS (/proc VmRSS) after each
+batch — the evidence that (a) rounds run exactly when the batch
+exceeds the threshold and (b) driver memory stays FLAT through batches
+≥2× the threshold (the rounds never collect ids or pairs; the driver
+walk only takes the undecided rest).
 
 Batches are built executor-side (spark.range + a hash-derived 64-dim
 vector; value % VEC_SPACE makes heavy identical-vector duplication, the
@@ -23,6 +23,7 @@ Usage:
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import sys
@@ -83,16 +84,18 @@ def main() -> None:
             - 5.0
         ),
     )
-    # spy the executor-side admit so the chosen branch is recorded, not
-    # inferred
-    taken: list = []
-    real = corpus._greedy_admit_frames
+    # the admit logs its executor-side round count per batch; record it
+    # rather than infer it from the batch size
+    rounds: list = []
 
-    def spy(ids, flagged, pairs):
-        taken.append(True)
-        return real(ids, flagged, pairs)
+    class RoundsHandler(logging.Handler):
+        def emit(self, record):
+            if hasattr(record, "admit_rounds"):
+                rounds.append(record.admit_rounds)
 
-    corpus._greedy_admit_frames = spy
+    log = logging.getLogger(corpus.__name__)
+    log.setLevel(logging.INFO)
+    log.addHandler(RoundsHandler())
     results = []
     for n in SIZES:
         work = tempfile.mkdtemp(prefix="srp_admit_sweep_")
@@ -104,10 +107,10 @@ def main() -> None:
         batch = spark.range(n).select(
             F.col("id").alias("vec_id"), emb.alias("embedding")
         )
-        taken.clear()
+        rounds.clear()
         rss0 = vm_rss_mb()
         t0 = time.perf_counter()
-        corpus._srp_gate_batch(batch, idx, surv)  # adaptive default
+        corpus._srp_gate_batch(batch, idx, surv)
         dt = time.perf_counter() - t0
         rss1 = vm_rss_mb()
         n_surv = spark.read.parquet(surv).count()
@@ -116,8 +119,8 @@ def main() -> None:
         results.append(
             {
                 "batch": n,
-                "branch": "distributed" if taken else "driver_walk",
-                "expected_branch": "distributed" if n > THRESHOLD else "driver_walk",
+                "admit_rounds": sum(rounds),
+                "expect_rounds": n > THRESHOLD,
                 "secs": round(dt, 1),
                 "survivors": n_surv,
                 "driver_rss_mb_before": round(rss0, 1),
