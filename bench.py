@@ -257,7 +257,7 @@ def bench_ivf_index_build(t: Tables) -> float:
 
 def bench_stream(spark) -> float:
     """Structured-Streaming throughput: the full vote pipeline
-    (text source → from_json parse → watermarked dedup → stateful tally)
+    (text source → from_json parse → one-vote dedup → stateful tally)
     over ~57k generated events, AvailableNow, RocksDB state store when
     available. This is the category headline — the reference IS a
     stream processor."""

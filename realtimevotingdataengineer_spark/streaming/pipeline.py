@@ -6,7 +6,7 @@ Reference chain (spark-streaming.py:66-74):
       → CAST(value AS STRING) → from_json(vote_schema) → select("data.*")
 then (intended, Note...txt:34-37 + the truncated section):
       → to_timestamp(voting_time)                      [expr_ts_convert]
-      → withWatermark + dropDuplicates(voter_id)       [one vote/voter]
+      → dropDuplicates(voter_id)                       [one vote/voter]
       → stateful tallies, outputMode("update")         [« les agrégera »]
       → kafka sink for the live dashboard              [sink_kafka_agg]
 
@@ -15,14 +15,16 @@ a Kafka stream, a file-backed text stream (tests — no broker in CI), or
 a bounded batch DataFrame (the oracle twins in operators/relational.py).
 
 Scale posture: the stateful ops (dropDuplicates, groupBy tallies) key
-their state by voter_id / candidate — uniform keys. The watermark does
-NOT bound that state: neither key holds the event-time column, so Spark
-never evicts a row. Dedup state grows by one row per distinct voter
-(the reference's Postgres UNIQUE also held forever) and the tally holds
-one row per candidate. Only dedup_one_vote_within and the windowed,
-session and stream-stream join operators below evict state past the
-watermark. Use the RocksDB state store in production. AQE stays OFF
-for streaming plans (reference pins this too, spark-streaming.py:27).
+their state by voter_id / candidate — uniform keys, with no event-time
+column, so no watermark could evict a row and the live tally sets none.
+Dedup state grows by one row per distinct voter (the reference's
+Postgres UNIQUE also held forever) and the tally holds one row per
+candidate; with no watermark, no state clean-up (no-data) micro-batch
+follows a data batch. Only dedup_one_vote_within and the windowed,
+session and stream-stream join operators below set the watermark,
+because they evict state past it. Use the RocksDB state store in
+production. AQE stays OFF for streaming plans (reference pins this too,
+spark-streaming.py:27).
 """
 
 from __future__ import annotations
@@ -33,12 +35,13 @@ from pyspark.sql import functions as F
 from ..functions import TIME_FMT
 from ..schemas import VOTE_EVENT_SCHEMA
 
-#: Event-time lateness bound: a row whose voting_time is further than this
-#: behind the latest seen reaches a stateful operator after the watermark
-#: and is dropped there. It GCs the state of dedup_one_vote_within and of
-#: the operators keyed on event time (windows, sessions, the stream-stream
-#: join); dedup_one_vote and the tallies are keyed without it, so their
-#: state is not bounded by it.
+#: Event-time lateness bound of the operators whose state it evicts:
+#: dedup_one_vote_within and those keyed on event time (windows, sessions,
+#: the stream-stream join). A row whose voting_time is further than this
+#: behind the latest seen reaches such an operator after the watermark and
+#: is dropped there. dedup_one_vote and the tallies do not set it: their
+#: keys hold no event time, so it would evict nothing, and each watermark
+#: advance would cost a state clean-up (no-data) micro-batch.
 WATERMARK = "10 minutes"
 
 
@@ -115,22 +118,20 @@ def with_event_time(events: DataFrame) -> DataFrame:
     return events.withColumn("voting_time", F.to_timestamp("voting_time", TIME_FMT))
 
 
-def dedup_one_vote(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
-    """One vote per voter (UNIQUE(voter_id) main.py:55; insert-then-
-    produce ordering voting.py:112-126) as streaming dedup on voter_id.
+def dedup_one_vote(events: DataFrame) -> DataFrame:
+    """One vote per voter, ever, late or not (UNIQUE(voter_id)
+    main.py:55; insert-then-produce ordering voting.py:112-126) as
+    streaming dedup on voter_id.
 
-    The key lacks the event-time column, so the watermark never evicts a
-    voter: the state keeps one row per distinct voter for the life of the
-    query, and a re-vote any time later is still suppressed, as the
-    reference's UNIQUE did. The watermark only drops votes that arrive
-    later than it, and only while voting_time is still a column at the
-    dedup: a downstream projection without it (tally_per_candidate's
-    aggregate) is pushed below the dedup, and then no vote is late.
+    No watermark: the state keeps one row per distinct voter for the
+    life of the query, a re-vote any time later is suppressed, and a
+    voter's first vote counts however late it arrives, as the
+    reference's UNIQUE did. A watermark would evict nothing from this
+    state (the key holds no event time) and would only add a state
+    clean-up micro-batch after every batch that advanced it.
     ``dedup_one_vote_within`` is the variant whose state the watermark
     bounds."""
-    return with_event_time(events).withWatermark("voting_time", watermark).dropDuplicates(
-        ["voter_id"]
-    )
+    return with_event_time(events).dropDuplicates(["voter_id"])
 
 
 def dedup_one_vote_within(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
@@ -188,7 +189,8 @@ def session_activity(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
 
 def turnout_by_state(events: DataFrame) -> DataFrame:
     """Turnout per address.state — the reason the schema denormalizes
-    address (main.py:37-41). Streaming-safe: dedup first, then count."""
+    address (main.py:37-41). Streaming-safe: dedup first (one vote per
+    voter, ever, late or not; no watermark), then count."""
     return dedup_one_vote(events).groupBy(F.col("address.state").alias("state")).agg(
         F.count(F.lit(1)).alias("turnout")
     )

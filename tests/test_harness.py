@@ -44,9 +44,10 @@ def test_comparator_order_insensitive(spark):
 
 
 def test_get_spark_sets_streaming_checkpoint_defaults(spark, monkeypatch):
-    """get_spark's conf carries both streaming checkpoint settings (RocksDB
-    changelog commits, the FileSystem checkpoint manager), the manager
-    class exists, and a caller's extra_conf still wins."""
+    """get_spark's conf carries the streaming checkpoint settings (RocksDB
+    changelog commits, the FileSystem checkpoint manager, the raw local
+    file system without .crc side-files), their classes exist, and a
+    caller's extra_conf still wins."""
     from types import SimpleNamespace
 
     from realtimevotingdataengineer_spark import session
@@ -75,7 +76,9 @@ def test_get_spark_sets_streaming_checkpoint_defaults(spark, monkeypatch):
     got = session.get_spark()
     assert got["spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"] == "true"
     assert got["spark.sql.streaming.checkpointFileManagerClass"] == manager
+    assert got["spark.hadoop.fs.file.impl"] == "org.apache.hadoop.fs.RawLocalFileSystem"
     spark._jvm.java.lang.Class.forName(manager)
+    spark._jvm.java.lang.Class.forName(got["spark.hadoop.fs.file.impl"])
     key = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     assert session.get_spark(extra_conf={key: "false"})[key] == "false"
 

@@ -99,8 +99,8 @@ def test_jdbc_explicit_driver_and_bounds_guard(spark, t, tmp_path_factory):
 
 def test_reference_architecture_end_to_end(spark, tmp_path_factory):
     """The reference's INTENDED architecture in one pipe: vote events
-    (Kafka-shaped text source) → from_json parse → watermarked one-vote
-    dedup → stateful tally → live tally table in a relational store
+    (Kafka-shaped text source) → from_json parse → one-vote dedup →
+    stateful tally → live tally table in a relational store
     (embedded Derby standing in for Postgres). The DB ends up holding
     exactly the batch-computed truth."""
     from realtimevotingdataengineer_spark.sources import generator

@@ -369,22 +369,23 @@ def test_live_tally_restarts_from_changelog_checkpoints(
 
 
 def test_dedup_state_outlives_the_watermark(spark, tmp_path):
-    """dedup_one_vote keys its state on voter_id alone, so the watermark
-    drops late rows but never evicts a voter: after the watermark has
-    passed every vote of the first file, the state still holds one row
-    per distinct voter, and a re-vote with a fresh event time is still
-    suppressed (one vote per voter, as the reference's UNIQUE)."""
+    """dedup_one_vote keys its state on voter_id alone and sets no
+    watermark: one vote per voter, ever, late or not, as the reference's
+    UNIQUE. Two hours of event time after the first file (far past where
+    a WATERMARK-long watermark would stand), the state still holds one
+    row per distinct voter, a re-vote with a fresh event time is still
+    suppressed, and a new voter's first vote at the first file's time is
+    kept, with no row dropped by a watermark."""
     src = tmp_path / "votes"
     src.mkdir()
     first = [_vote_line(v, 0) for v in range(10)]
-    later = [_vote_line(v, 7200) for v in range(10, 20)]  # watermark -> 1h50m
+    later = [_vote_line(v, 7200) for v in range(10, 20)]
     # voter 0 again with a fresh time (a duplicate, still in state),
-    # voter 20 (new), voter 21 at the first file's time (late: dropped)
+    # voter 20 (new), voter 21 at the first file's time (late: kept)
     last = [_vote_line(0, 7200), _vote_line(20, 7200), _vote_line(21, 0)]
     raw = pipeline.read_text_stream(spark, str(src), max_files_per_trigger=1)
     deduped = pipeline.dedup_one_vote(pipeline.parse_vote_events(raw))
-    # the whole row goes to the sink: a projection without voting_time
-    # would be pushed below the dedup, and no row would be late there
+    # the whole row goes to the sink, voting_time included
     q = sinks.write_memory(deduped, "dedup_wm_state", "append")
     try:
         for i, lines in enumerate([first, later, last]):
@@ -394,24 +395,23 @@ def test_dedup_state_outlives_the_watermark(spark, tmp_path):
     finally:
         q.stop()
     got = [r.voter_id for r in spark.sql("SELECT voter_id FROM dedup_wm_state").collect()]
-    assert sorted(got) == sorted(f"voter-{v}" for v in range(21))
-    assert state["numRowsTotal"] == 21
-    assert state["numRowsDroppedByWatermark"] == 1
+    assert sorted(got) == sorted(f"voter-{v}" for v in range(22))
+    assert state["numRowsTotal"] == 22
+    assert state["numRowsDroppedByWatermark"] == 0
 
 
 def test_live_tally_counts_late_first_votes(spark, tmp_path):
     """The live tally counts every voter's first vote however late it
-    arrives, as the reference's Postgres tally did: the aggregate reads
-    no voting_time, so its projection is pushed below the one-vote
-    dedup and no row is late there. Same three files as
-    test_dedup_state_outlives_the_watermark, where dedup_one_vote alone
-    drops voter 21's late vote; here it is counted (22 votes: voters
-    0-21, voter 0's re-vote suppressed) and neither state operator
-    drops a row by the watermark."""
+    arrives, as the reference's Postgres tally did: dedup_one_vote sets
+    no watermark, so no row is late at either state operator. Same
+    three files as test_dedup_state_outlives_the_watermark: voter 21's
+    vote, two hours of event time behind the second file, is counted
+    (22 votes: voters 0-21, voter 0's re-vote suppressed) and neither
+    state operator drops a row by a watermark."""
     src = tmp_path / "votes"
     src.mkdir()
     first = [_vote_line(v, 0) for v in range(10)]
-    later = [_vote_line(v, 7200) for v in range(10, 20)]  # watermark -> 1h50m
+    later = [_vote_line(v, 7200) for v in range(10, 20)]
     last = [_vote_line(0, 7200), _vote_line(20, 7200), _vote_line(21, 0)]
     raw = pipeline.read_text_stream(spark, str(src), max_files_per_trigger=1)
     tally = pipeline.tally_per_candidate(
@@ -440,6 +440,46 @@ def test_live_tally_counts_late_first_votes(spark, tmp_path):
         for p in progress
         for op in p["stateOperators"]
     )
+
+
+def test_live_tally_runs_one_batch_per_file(spark, tmp_path, checkpoint_defaults):
+    """The live tally runs exactly one micro-batch per vote file: with no
+    watermark to advance, no state clean-up (no-data) batch follows a
+    data batch. Executed batches are counted from the checkpoint's
+    commit log; recentProgress also lists an idle query's progress
+    reports. Each file's event times lie a minute past the last, as in
+    a live election."""
+    src = tmp_path / "votes"
+    src.mkdir()
+    ckpt = tmp_path / "ckpt"
+    n_files, per_file = 4, 20
+    raw = pipeline.read_text_stream(spark, str(src), max_files_per_trigger=1)
+    tally = pipeline.tally_per_candidate(
+        pipeline.dedup_one_vote(pipeline.parse_vote_events(raw))
+    )
+    q = (
+        tally.writeStream.format("memory")
+        .queryName("one_batch_tally")
+        .option("checkpointLocation", str(ckpt))
+        .outputMode("update")
+        .start()
+    )
+    try:
+        for i in range(n_files):
+            ids = range(i * per_file, (i + 1) * per_file)
+            _write_vote_file(
+                src / f"votes-{i}.jsonl", [_vote_line(v, i * 60 + v % per_file) for v in ids]
+            )
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    got = spark.sql(
+        "SELECT sum(v) FROM (SELECT max(total_votes) AS v FROM one_batch_tally "
+        "GROUP BY candidate_id)"
+    ).collect()[0][0]
+    assert got == n_files * per_file
+    batches = [f for f in (ckpt / "commits").iterdir() if f.name.isdigit()]
+    assert len(batches) == n_files, sorted(f.name for f in batches)
 
 
 def test_stream_dedup_exact_matches_batch_groups(spark, sf_dir, tmp_path):

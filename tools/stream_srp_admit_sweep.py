@@ -18,6 +18,10 @@ Usage:
     # default: sizes 250k,500k,1M,2M,4M at the shipped threshold (2M)
     # quick local check: python tools/stream_srp_admit_sweep.py \
     #       50000,100000,200000 100000
+
+The session is the bench's (``bench.bench_session``): cores and shuffle
+width from ``SPARK_GRAFT_CPUS``, driver heap from
+``SPARK_GRAFT_DRIVER_MEM``.
 """
 
 from __future__ import annotations
@@ -34,7 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from realtimevotingdataengineer_spark.session import get_spark  # noqa: E402
+from bench import bench_session  # noqa: E402
 from realtimevotingdataengineer_spark.streaming import corpus  # noqa: E402
 
 SIZES = (
@@ -43,12 +47,6 @@ SIZES = (
     else [250_000, 500_000, 1_000_000, 2_000_000, 4_000_000]
 )
 THRESHOLD = int(sys.argv[2]) if len(sys.argv) > 2 else corpus.ADMIT_DRIVER_MAX
-# local-mode note: the "driver" JVM is also every executor, so its heap
-# must hold the batch's checkpointed blocks (~4 GB at 4M×64-dim) PLUS
-# execution memory — size it like the executors it stands in for. The
-# probe's RSS claim is about the PYTHON process (the admit collects),
-# which /proc/self/status isolates from the JVM.
-DRIVER_MEM = os.environ.get("SWEEP_DRIVER_MEM", "8g")
 VEC_SPACE = 20_000
 EMB_DIM = 64
 
@@ -63,16 +61,12 @@ def vm_rss_mb() -> float:
 
 def main() -> None:
     corpus.ADMIT_DRIVER_MAX = THRESHOLD
-    spark = get_spark(
-        "local[32]",
-        {
-            "spark.sql.shuffle.partitions": "32",
-            "spark.ui.showConsoleProgress": "false",
-            "spark.ui.enabled": "false",
-            "spark.driver.memory": DRIVER_MEM,
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # local mode: the driver JVM is also every executor, so its heap
+    # (SPARK_GRAFT_DRIVER_MEM) must hold the batch's checkpointed blocks
+    # (~4 GB at 4M×64-dim) plus execution memory. The probe's RSS claim
+    # is about the PYTHON process (the admit collects), which
+    # /proc/self/status isolates from the JVM.
+    spark = bench_session("srp_admit_sweep")
     emb = F.transform(
         F.sequence(F.lit(0), F.lit(EMB_DIM - 1)),
         lambda i: (
