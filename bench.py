@@ -258,8 +258,8 @@ def bench_ivf_index_build(t: Tables) -> float:
 def bench_stream(spark) -> float:
     """Structured-Streaming throughput: the full vote pipeline
     (text source → from_json parse → one-vote dedup → stateful tally)
-    over ~57k generated events, AvailableNow, RocksDB state store when
-    available. This is the category headline — the reference IS a
+    over ~57k generated events, AvailableNow, on the session's RocksDB
+    state store. This is the category headline — the reference IS a
     stream processor."""
     import shutil
     import tempfile
@@ -268,13 +268,6 @@ def bench_stream(spark) -> float:
     from realtimevotingdataengineer_spark.streaming import pipeline, sinks
 
     d = tempfile.mkdtemp(prefix="bench_stream_")
-    try:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-    except Exception:
-        pass  # fall back to the HDFS-backed store
     # Stateful-op parallelism is per-query (fixed by the first checkpoint):
     # size it to state volume, not core count — each state partition costs
     # a task, a store load and a commit per batch. Measured 8.1s at 32 vs

@@ -15,10 +15,12 @@ from pyspark.sql import SparkSession
 
 APP_NAME = "realtimevotingdataengineer-spark"
 
-#: Session defaults. At 100 TB these are cluster-level knobs; the
-#: values here are sized for local[32] test runs but the *shape* of the
-#: config (AQE + skew join handling + sane shuffle parallelism, cheap
-#: streaming checkpoints) is what carries to a 1000-executor deployment.
+#: Session defaults for the product, bench.py, the tools and pytest
+#: (callers override single entries through ``extra_conf``). At 100 TB
+#: these are cluster-level knobs; the values here are sized for one
+#: host, but the *shape* of the config (AQE + skew join handling + sane
+#: shuffle parallelism, cheap streaming checkpoints) is what carries to
+#: a 1000-executor deployment.
 BATCH_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
@@ -35,6 +37,11 @@ BATCH_CONF = {
     # forks per micro-batch with Spark's defaults and ~43 with the two
     # settings below (PERF.md, "Streaming checkpoints without shell
     # forks"; pinned by tests/test_streaming.py).
+    # Changelog checkpointing (next) is a RocksDB setting and does
+    # nothing without this provider.
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
     # A RocksDB commit writes one changelog file per store instead of
     # uploading SST files plus a zip and deleting its local checkpoint;
     # snapshots move to the maintenance thread.

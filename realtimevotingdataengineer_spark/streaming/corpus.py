@@ -988,51 +988,7 @@ def _srp_gate_batch(
         vecs, "vec_id", "embedding", SRP_BAND_BITS, SRP_BANDS
     ).localCheckpoint(eager=True)
     new_bands = _srp_sig_bands(sigs).localCheckpoint(eager=True)
-    # mergeSchema: after ONE batch appended sig-carrying files to a
-    # legacy (pre-'sig') bands dir the dir is mixed-schema, and a plain
-    # read may infer the schema from either kind of footer — legacy
-    # rows would then surface with sig NULL and silently drop out of
-    # the rot/kd probe keys (round-11 advice: the 'sig not in columns'
-    # gate never fires on a mixed dir)
-    idx_bands = (
-        spark.read.option("mergeSchema", "true").parquet(f"{index_path}/bands")
-    )
-    # legacy (pre-sub-banding) rows without the packed signature:
-    # reconstruct it — sig is by construction Σ bv_j << 4j over the
-    # vector's DISTINCT band rows (replay may have duplicated rows;
-    # each vector has exactly one bv per band, so distinct first, then
-    # sum — round-10 advice: old indexes must not fail at probe time).
-    # Repair is row-level (coalesce), not column-presence-gated, so a
-    # mixed legacy+new dir heals too; the rebuild scans only the
-    # NULL-sig rows, which is empty (and free at plan time via the
-    # isEmpty short-circuit) on a fully-migrated index. Rebuild the
-    # artifact with build_srp_stream_index to stop paying the check.
-    if "sig" not in idx_bands.columns:
-        idx_bands = idx_bands.withColumn("sig", F.lit(None).cast("bigint"))
-    legacy = idx_bands.filter(F.col("sig").isNull())
-    if not legacy.isEmpty():
-        _LOG.warning(
-            "SRP index at %s carries pre-'sig' rows — reconstructing "
-            "per batch; rebuild the index to persist it", index_path
-        )
-        sig_map = (
-            legacy.select("vec_id", "band", "bv")
-            .distinct()
-            .groupBy("vec_id")
-            .agg(
-                F.sum(
-                    F.expr(
-                        f"shiftleft(CAST(bv AS BIGINT), {SRP_BAND_BITS} * band)"
-                    )
-                ).alias("sig_rebuilt")
-            )
-        )
-        idx_bands = idx_bands.join(sig_map, "vec_id", "left").select(
-            "vec_id",
-            "band",
-            "bv",
-            F.coalesce(F.col("sig"), F.col("sig_rebuilt")).alias("sig"),
-        )
+    idx_bands = spark.read.parquet(f"{index_path}/bands")
     idx_vecs = spark.read.parquet(f"{index_path}/vectors")
     cand_idx = _capped_probe_pairs(
         idx_bands, new_bands, probe_cap, batch_rows=n_batch

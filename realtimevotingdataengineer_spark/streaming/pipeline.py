@@ -22,9 +22,9 @@ Postgres UNIQUE also held forever) and the tally holds one row per
 candidate; with no watermark, no state clean-up (no-data) micro-batch
 follows a data batch. Only dedup_one_vote_within and the windowed,
 session and stream-stream join operators below set the watermark,
-because they evict state past it. Use the RocksDB state store in
-production. AQE stays OFF for streaming plans (reference pins this too,
-spark-streaming.py:27).
+because they evict state past it. State lives in the RocksDB store
+that session.BATCH_CONF selects for every session. AQE stays OFF for
+streaming plans (reference pins this too, spark-streaming.py:27).
 """
 
 from __future__ import annotations

@@ -116,53 +116,3 @@ def track_vote_attempts(events: DataFrame, state_ttl_ms: int = 0) -> DataFrame:
             timeoutConf=timeout,
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4.x): the successor API to
-# applyInPandasWithState — typed state handles (value/list/map state),
-# explicit processor lifecycle, timers. Requires the RocksDB state store.
-# ---------------------------------------------------------------------------
-
-try:  # Spark 4.x API; ALSO requires protobuf at runtime (worker side),
-    # which this container does not ship — running_tally_tws stays None
-    # there and the test skips with the reason recorded.
-    import google.protobuf  # noqa: F401  (transformWithState hard dep)
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class RunningTallyProcessor(StatefulProcessor):
-        """Per-candidate running vote total as a typed ValueState — the
-        reference's continuously-updating tally (Note...txt:34-37)
-        expressed in the modern stateful API. Emits one updated row per
-        candidate per micro-batch that touched it."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.total = handle.getValueState("total", "total BIGINT")
-
-        def handleInputRows(self, key, rows, timerValues):
-            batch_votes = 0
-            for pdf in rows:
-                batch_votes += int(pdf["vote"].sum())
-            prev = self.total.get()[0] if self.total.exists() else 0
-            new_total = prev + batch_votes
-            self.total.update((new_total,))
-            yield pd.DataFrame(
-                {"candidate_id": [key[0]], "total_votes": [new_total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    def running_tally_tws(events: DataFrame) -> DataFrame:
-        """Stateful tally via transformWithStateInPandas. The query must
-        run with the RocksDB state store provider (the API requires it)."""
-        return events.groupBy("candidate_id").transformWithStateInPandas(
-            statefulProcessor=RunningTallyProcessor(),
-            outputStructType="candidate_id string, total_votes bigint",
-            outputMode="Update",
-            timeMode="None",
-        )
-
-except ImportError:  # pragma: no cover - older PySpark
-    RunningTallyProcessor = None  # type: ignore[assignment]
-    running_tally_tws = None  # type: ignore[assignment]

@@ -44,14 +44,16 @@ def test_comparator_order_insensitive(spark):
 
 
 def test_get_spark_sets_streaming_checkpoint_defaults(spark, monkeypatch):
-    """get_spark's conf carries the streaming checkpoint settings (RocksDB
-    changelog commits, the FileSystem checkpoint manager, the raw local
-    file system without .crc side-files), their classes exist, and a
-    caller's extra_conf still wins."""
+    """get_spark's conf carries the streaming checkpoint settings (the
+    RocksDB state store with changelog commits, the FileSystem
+    checkpoint manager, the raw local file system without .crc
+    side-files), their classes exist, and a caller's extra_conf still
+    wins."""
     from types import SimpleNamespace
 
     from realtimevotingdataengineer_spark import session
 
+    provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     manager = (
         "org.apache.spark.sql.execution.streaming.checkpointing."
         "FileSystemBasedCheckpointFileManager"
@@ -74,9 +76,11 @@ def test_get_spark_sets_streaming_checkpoint_defaults(spark, monkeypatch):
 
     monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
     got = session.get_spark()
+    assert got["spark.sql.streaming.stateStore.providerClass"] == provider
     assert got["spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"] == "true"
     assert got["spark.sql.streaming.checkpointFileManagerClass"] == manager
     assert got["spark.hadoop.fs.file.impl"] == "org.apache.hadoop.fs.RawLocalFileSystem"
+    spark._jvm.java.lang.Class.forName(provider)
     spark._jvm.java.lang.Class.forName(manager)
     spark._jvm.java.lang.Class.forName(got["spark.hadoop.fs.file.impl"])
     key = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
@@ -88,10 +92,20 @@ def _scripts() -> list[Path]:
 
 
 def test_scripts_build_spark_through_get_spark():
-    """bench.py and every tool start Spark via session.get_spark (the
-    bench config lives once, in bench.bench_session) — no hand-copied
-    SparkSession.builder blocks."""
-    offenders = [p.name for p in _scripts() if "SparkSession.builder" in p.read_text()]
+    """bench.py, every tool and every test start Spark via
+    session.get_spark (the bench config lives once, in
+    bench.bench_session; pytest's in conftest.py) — no hand-copied
+    SparkSession.builder blocks. Matched on the syntax tree, since this
+    file names the attribute in its own text."""
+    offenders = [
+        p.name
+        for p in [*_scripts(), *sorted((REPO / "tests").glob("*.py"))]
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Attribute)
+        and node.attr == "builder"
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "SparkSession"
+    ]
     assert offenders == []
 
 

@@ -53,60 +53,3 @@ def test_attempts_accumulate_across_batches(spark, two_batch_dir):
             assert (attempts, dup) == (2, "yes"), voter_id
         else:
             assert (attempts, dup) == (1, "no"), voter_id
-
-
-def test_transform_with_state_running_tally(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 typed-state API): the running
-    per-candidate tally equals the batch truth after draining the
-    backlog. Runs on the RocksDB state store (required by the API)."""
-    import json as _json
-
-    import pytest as _pytest
-
-    from realtimevotingdataengineer_spark.streaming import sinks
-    from realtimevotingdataengineer_spark.streaming.stateful import running_tally_tws
-
-    if running_tally_tws is None:
-        _pytest.skip(
-            "transformWithStateInPandas unavailable: needs Spark 4 + protobuf "
-            "(not shipped in this container; no installs allowed)"
-        )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    rows = [
-        {"voter_id": f"v{i}", "candidate_id": f"cand-{i % 3}", "vote": 1}
-        for i in range(60)
-    ]
-    half = len(rows) // 2
-    (src / "b1.jsonl").write_text("\n".join(_json.dumps(r) for r in rows[:half]))
-    (src / "b2.jsonl").write_text("\n".join(_json.dumps(r) for r in rows[half:]))
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema("voter_id string, candidate_id string, vote long")
-            .option("maxFilesPerTrigger", "1")
-            .json(str(src))
-        )
-        tally = running_tally_tws(stream)
-        q = sinks.write_memory(tally, "tws_tally", "update")
-        q.processAllAvailable()
-        q.stop()
-        got = {
-            r["candidate_id"]: r["total_votes"]
-            for r in spark.sql(
-                "SELECT candidate_id, max(total_votes) AS total_votes "
-                "FROM tws_tally GROUP BY candidate_id"
-            ).collect()
-        }
-        assert got == {"cand-0": 20, "cand-1": 20, "cand-2": 20}
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)

@@ -9,6 +9,10 @@ genuinely exercised. Reports the volume-weighted steady-state
 processedRowsPerSecond and the signature-store size.
 
 Usage: python tools/stream_corpus_throughput.py [docs_per_sec] [seconds]
+
+The session is the bench's (``bench.bench_session``) with 8 shuffle
+partitions: cores and driver heap from ``SPARK_GRAFT_CPUS`` and
+``SPARK_GRAFT_DRIVER_MEM``.
 """
 
 from __future__ import annotations
@@ -23,7 +27,7 @@ import time  # noqa: E402
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from realtimevotingdataengineer_spark.session import get_spark  # noqa: E402
+from bench import bench_session  # noqa: E402
 from realtimevotingdataengineer_spark.streaming import corpus, sinks  # noqa: E402
 
 RATE = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
@@ -38,19 +42,7 @@ DOC_TOKENS = 32
 
 
 def main() -> None:
-    spark = get_spark(
-        "local[32]",
-        {
-            "spark.sql.shuffle.partitions": "8",
-            "spark.ui.showConsoleProgress": "false",
-            "spark.ui.enabled": "false",
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-            ),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("stream_corpus_throughput", {"spark.sql.shuffle.partitions": "8"})
 
     rate = (
         spark.readStream.format("rate")

@@ -11,6 +11,10 @@ volume-weighted steady-state docs/s plus the index growth (bands rows ==
 4 × admitted survivors).
 
 Usage: python tools/stream_minhash_throughput.py [docs_per_sec] [seconds]
+
+The session is the bench's (``bench.bench_session``) with 8 shuffle
+partitions: cores and driver heap from ``SPARK_GRAFT_CPUS`` and
+``SPARK_GRAFT_DRIVER_MEM``.
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ import time  # noqa: E402
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from realtimevotingdataengineer_spark.session import get_spark  # noqa: E402
+from bench import bench_session  # noqa: E402
 from realtimevotingdataengineer_spark.streaming import corpus  # noqa: E402
 
 RATE = int(sys.argv[1]) if len(sys.argv) > 1 else 5_000
@@ -43,13 +47,10 @@ DOC_TOKENS = 32
 
 
 def main() -> None:
-    spark = get_spark(
-        "local[32]",
+    spark = bench_session(
+        "stream_minhash_throughput",
         {
             "spark.sql.shuffle.partitions": "8",
-            "spark.ui.showConsoleProgress": "false",
-            "spark.ui.enabled": "false",
-            "spark.driver.memory": "8g",
             # stop() interrupts the in-flight foreachBatch; Spark's
             # isInterruptionException then regexes the multi-KB py4j
             # exception string and java.util.regex recurses per char —
@@ -57,7 +58,6 @@ def main() -> None:
             "spark.driver.extraJavaOptions": "-Xss64m",
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="mh_gate_")
     idx, surv, ckpt = f"{work}/idx", f"{work}/surv", f"{work}/ckpt"
     corpus.build_minhash_index(

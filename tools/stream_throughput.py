@@ -7,6 +7,10 @@ achieved steady-state events/s (processedRowsPerSecond from the query's
 own progress metrics, excluding the first warm-up batch).
 
 Usage: python tools/stream_throughput.py [rows_per_sec] [seconds]
+
+The session is the bench's (``bench.bench_session``) with 8 shuffle
+partitions: cores and driver heap from ``SPARK_GRAFT_CPUS`` and
+``SPARK_GRAFT_DRIVER_MEM``.
 """
 
 from __future__ import annotations
@@ -21,7 +25,7 @@ import time  # noqa: E402
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from realtimevotingdataengineer_spark.session import get_spark  # noqa: E402
+from bench import bench_session  # noqa: E402
 from realtimevotingdataengineer_spark.streaming import pipeline, sinks  # noqa: E402
 
 RATE = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
@@ -29,19 +33,8 @@ SECONDS = int(sys.argv[2]) if len(sys.argv) > 2 else 20
 
 
 def main() -> None:
-    spark = get_spark(
-        "local[32]",
-        {
-            "spark.sql.shuffle.partitions": "8",  # state-volume sized
-            "spark.ui.showConsoleProgress": "false",
-            "spark.ui.enabled": "false",
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-            ),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # 8 shuffle partitions: stateful parallelism sized to state volume
+    spark = bench_session("stream_throughput", {"spark.sql.shuffle.partitions": "8"})
 
     # rate rows → the wire shape (key, value JSON) → the real parse chain.
     # voter cardinality 100k keeps the dedup state store genuinely busy.
