@@ -1098,13 +1098,16 @@ def stream_dedup_one_vote(t: Tables) -> DataFrame:
     """One vote per voter (UNIQUE(voter_id), main.py:55; insert-then-produce
     voting.py:112-126). Batch twin: keep each user's earliest event with a
     deterministic (ts, event_id) order — streaming twin is
-    withWatermark+dropDuplicates (streaming/pipeline.py)."""
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    return (
-        t.events.select("user_id", "event_id", "ts", "event_type")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
+    dropDuplicates on voter_id (streaming/pipeline.dedup_one_vote).
+
+    A per-voter aggregate, not a window rank: the min of a (ts, event_id,
+    event_type) struct is the row the window's first rank would pick,
+    since structs compare field by field, ascending, nulls first — the
+    window's default order. The plan sorts on user_id alone (one radix
+    key) instead of sorting and ranking on (user_id, ts, event_id)."""
+    first = F.min(F.struct("ts", "event_id", "event_type")).alias("v")
+    return t.events.groupBy("user_id").agg(first).select(
+        "user_id", "v.event_id", "v.ts", "v.event_type"
     )
 
 

@@ -25,6 +25,9 @@ BATCH_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # Smallest partition AQE coalesces to (default 1MB): a ~1.5MB final
+    # aggregate keeps a task per core; tiny tallies still merge into one.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64KB",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
     # Arrow for any pandas_udf / mapInPandas path (the only sanctioned
@@ -61,8 +64,10 @@ BATCH_CONF = {
     # chmod. On the live tally that doubles the checkpoint files per
     # micro-batch: a JFR count read 38 chmod forks per vote file with
     # the default and 19 with the raw one (PERF.md, "One micro-batch
-    # per vote file"). Nothing here reads those side-files; Spark's own
-    # state-file checksums (<file>.crc) are written either way.
+    # per vote file"). Nothing here reads those side-files. Spark's own
+    # checkpoint checksums (<file>.crc, spark.sql.streaming.checkpoint.
+    # fileChecksum.enabled) stay on: they verify every state and offset
+    # file on read, at 8 of those 19 chmod forks per vote file.
     "spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
 }
 

@@ -14,6 +14,7 @@ touching operator code.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
 
 from ..session import configure_for_queries
 
@@ -34,19 +35,22 @@ TABLE_NAMES = (
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.parquet(path)
+    if name == "events" and isinstance(df.schema["ts"].dataType, TimestampNTZType):
         # events.ts is parquet timestamp[us] with no timezone, which
         # Spark 4 surfaces as TIMESTAMP_NTZ. Operators (and DuckDB's
-        # oracle views) treat ts as a plain instant; with the session tz
-        # pinned to UTC the cast is value-preserving, and normalizing at
-        # this single choke point lets every consumer use ordinary
+        # oracle views) treat ts as a plain instant, so the file is read
+        # again with ts typed TIMESTAMP: the scan takes the stored micros
+        # as the instant, with no per-row cast (a cast converts every
+        # value through the session zone). Under the session's UTC pin
+        # the values equal the cast's, and every consumer gets ordinary
         # timestamp arithmetic (cast("long"), window(), session_window()).
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import TimestampNTZType
-
-        if isinstance(df.schema["ts"].dataType, TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        fields = [
+            StructField(f.name, TimestampType(), f.nullable) if f.name == "ts" else f
+            for f in df.schema.fields
+        ]
+        df = spark.read.schema(StructType(fields)).parquet(path)
     return df
 
 

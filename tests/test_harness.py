@@ -47,8 +47,9 @@ def test_get_spark_sets_streaming_checkpoint_defaults(spark, monkeypatch):
     """get_spark's conf carries the streaming checkpoint settings (the
     RocksDB state store with changelog commits, the FileSystem
     checkpoint manager, the raw local file system without .crc
-    side-files), their classes exist, and a caller's extra_conf still
-    wins."""
+    side-files, Spark's own checkpoint checksums left on) and the AQE
+    coalescing floor, their classes exist, and a caller's extra_conf
+    still wins."""
     from types import SimpleNamespace
 
     from realtimevotingdataengineer_spark import session
@@ -80,6 +81,8 @@ def test_get_spark_sets_streaming_checkpoint_defaults(spark, monkeypatch):
     assert got["spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"] == "true"
     assert got["spark.sql.streaming.checkpointFileManagerClass"] == manager
     assert got["spark.hadoop.fs.file.impl"] == "org.apache.hadoop.fs.RawLocalFileSystem"
+    assert got.get("spark.sql.streaming.checkpoint.fileChecksum.enabled", "true") != "false"
+    assert got["spark.sql.adaptive.coalescePartitions.minPartitionSize"] == "64KB"
     spark._jvm.java.lang.Class.forName(provider)
     spark._jvm.java.lang.Class.forName(manager)
     spark._jvm.java.lang.Class.forName(got["spark.hadoop.fs.file.impl"])

@@ -72,13 +72,73 @@ def test_dedup_exact_is_identity_without_dups(t):
     assert QUERIES["dedup_exact"](t).count() == t.documents.count()
 
 
-def test_stream_dedup_keeps_earliest(t):
+def _one_vote_events(spark):
+    """Votes with the one-vote rule's edge cases: equal ts under
+    different event_ids (user 1), a null ts (user 2), a null user_id
+    (two rows), and a user whose earliest ts is not its least event_id
+    (user 3)."""
+    import datetime as dt
+
+    def at(sec):
+        return dt.datetime(2024, 1, 15, 12, 0, sec)
+
+    rows = [
+        (11, at(5), 1, "vote_c"),
+        (10, at(5), 1, "vote_b"),
+        (12, at(9), 1, "vote_a"),
+        (20, at(1), 2, "vote_a"),
+        (21, None, 2, "vote_c"),
+        (30, at(3), None, "vote_a"),
+        (31, at(2), None, "vote_b"),
+        (40, at(7), 3, "vote_a"),
+        (41, at(6), 3, "vote_b"),
+        (50, at(4), 4, "vote_c"),
+    ]
+    return spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, event_type string"
+    )
+
+
+def test_stream_dedup_keeps_earliest(spark, t):
     out = QUERIES["stream_dedup_one_vote"](t)
     # one row per user, and it is that user's min ts
     per_user = t.events.groupBy("user_id").agg(F.min("ts").alias("min_ts"))
     joined = out.join(per_user, "user_id")
     assert joined.filter(F.col("ts") != F.col("min_ts")).count() == 0
     assert out.count() == t.events.select("user_id").distinct().count()
+
+    # a tie on ts goes to the least event_id
+    class _T:
+        events = _one_vote_events(spark)
+
+    won = QUERIES["stream_dedup_one_vote"](_T()).filter("user_id = 1").collect()
+    assert [(r.event_id, r.event_type) for r in won] == [(10, "vote_b")]
+
+
+def test_stream_dedup_one_vote_equals_window_rank(spark):
+    """The per-voter aggregate keeps exactly the rows of the window rank
+    it replaced, kept here as the reference: the same winner of a ts
+    tie, a null ts first, and null user_ids as one voter."""
+    from pyspark.sql import Window
+
+    df = _one_vote_events(spark)
+
+    class _T:
+        events = df
+
+    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
+    ref = (
+        df.select("user_id", "event_id", "ts", "event_type")
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+    got = QUERIES["stream_dedup_one_vote"](_T())
+    assert got.columns == ref.columns
+    assert sorted(got.collect(), key=repr) == sorted(ref.collect(), key=repr)
+    assert {r.user_id: r.event_id for r in got.collect()} == {
+        1: 10, 2: 21, None: 31, 3: 41, 4: 50
+    }
 
 
 def test_session_window_counts_sum_to_events(t):
@@ -1369,12 +1429,16 @@ def test_incremental_export_equals_full_export(t):
     assert full == inc
 
 
-def test_srp_kernel_bitwise_equals_expression_chains(t):
+def test_srp_kernel_bitwise_equals_expression_chains(spark, t):
     """srp_band_signatures' Arrow kernel must reproduce the pinned
     left-assoc projection chains EXACTLY — every band value of every
     vector — since the DuckDB oracles still evaluate the textual
     chains. This is the license for swapping the kernel into all three
-    SRP keys without touching their oracles."""
+    SRP keys without touching their oracles.
+
+    The textual chains outgrow Java's 64 KB method limit, so they are
+    evaluated interpreted (no whole-stage codegen, no expression
+    codegen) instead of through a logged CodeGenerator failure."""
     from pyspark.sql import functions as F
 
     from realtimevotingdataengineer_spark.operators.dedup import (
@@ -1398,14 +1462,28 @@ def test_srp_kernel_bitwise_equals_expression_chains(t):
             )
         return F.expr(" + ".join(terms)).alias(f"bv{k}")
 
-    expr_sigs = sorted(
-        map(
-            tuple,
-            t.embeddings.select(
-                "vec_id", *[band_col(k) for k in range(SRP_BANDS)]
-            ).collect(),
+    interpreted = {
+        "spark.sql.codegen.wholeStage": "false",
+        "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+    }
+    saved = {k: spark.conf.get(k, None) for k in interpreted}
+    try:
+        for k, v in interpreted.items():
+            spark.conf.set(k, v)
+        expr_sigs = sorted(
+            map(
+                tuple,
+                t.embeddings.select(
+                    "vec_id", *[band_col(k) for k in range(SRP_BANDS)]
+                ).collect(),
+            )
         )
-    )
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     kern_sigs = sorted(
         map(
             tuple,

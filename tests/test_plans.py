@@ -297,6 +297,19 @@ def test_simhash_signature_is_single_aggregation(t):
     assert "sequence(0, 31" not in plan
 
 
+def test_stream_dedup_one_vote_is_per_voter_aggregate(t):
+    """stream_dedup_one_vote keeps each voter's first vote with a min
+    over (ts, event_id, event_type) per user_id: no Window or
+    WindowGroupLimit node, and every sort is on the one user_id key
+    (the window rank sorted on user_id, ts, event_id twice)."""
+    import re
+
+    plan = formatted_plan(QUERIES["stream_dedup_one_vote"](t))
+    assert not re.findall(r"^\(\d+\) Window", plan, re.M)
+    sorts = re.findall(r"^\(\d+\) Sort\nInput .*\nArguments: \[(.*?)\]", plan, re.M)
+    assert sorts and all(re.fullmatch(r"user_id#\d+L ASC NULLS FIRST", s) for s in sorts)
+
+
 def test_gapfill_broadcasts_day_spine(t):
     """events_gapfill_daily's user×day spine must come from a broadcast
     of the tiny day dimension — a shuffled cross join would move the

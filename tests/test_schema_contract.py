@@ -116,3 +116,25 @@ def test_table_schema_matches_contract(spark, sf, table):
         f"{table}@{sf}: schema drifted from the operator contract.\n"
         f"  expected: {EXPECTED[table]}\n  actual:   {actual}"
     )
+
+
+@pytest.mark.skipif(
+    "/root/testdata/sf0.01" not in SF_DIRS, reason="sf0.01 testdata not present"
+)
+def test_events_ts_read_as_instant_equals_cast(spark):
+    """load_table types events.ts at the scan (TIMESTAMP read schema over
+    the file's TIMESTAMP_NTZ micros) instead of casting every row; each
+    event's ts equals what the per-row cast gave under the UTC pin."""
+    from pyspark.sql import functions as F
+
+    from realtimevotingdataengineer_spark.plans import formatted_plan
+
+    sf = "/root/testdata/sf0.01"
+    typed = load_table(spark, sf, "events")
+    assert "cast(ts" not in formatted_plan(typed).lower()
+    cast = spark.read.parquet(f"{sf}/events.parquet").select(
+        "event_id", F.col("ts").cast("timestamp").alias("ts")
+    )
+    typed = typed.select("event_id", "ts")
+    assert typed.count() == cast.count() > 0
+    assert typed.exceptAll(cast).count() == 0 and cast.exceptAll(typed).count() == 0
