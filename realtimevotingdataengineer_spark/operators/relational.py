@@ -1099,6 +1099,9 @@ def stream_dedup_one_vote(t: Tables) -> DataFrame:
     voting.py:112-126). Batch twin: keep each user's earliest event with a
     deterministic (ts, event_id) order — streaming twin is
     dropDuplicates on voter_id (streaming/pipeline.dedup_one_vote).
+    The two differ on conflicting re-votes: the stream keeps the vote
+    that ARRIVES first, this twin the earliest (ts, event_id), so a
+    re-vote that arrives later with an earlier ts wins here only.
 
     A per-voter aggregate, not a window rank: the min of a (ts, event_id,
     event_type) struct is the row the window's first rank would pick,

@@ -686,12 +686,6 @@ def _fold_dot(a, b):
     return acc
 
 
-#: per-session memo for ivf_assign_fixed's collected codebook broadcast,
-#: keyed (applicationId, embeddings-plan semanticHash, n_cent). Bounded:
-#: one ≤16 MB entry per distinct corpus/codebook pair per session.
-_CODEBOOK_CACHE: dict = {}
-
-
 def ivf_assign_fixed(emb: DataFrame, n_probe: int = 1, n_cent: int = N_CENTROIDS) -> DataFrame:
     """(vec_id, cent_id) top-`n_probe` nearest-centroid assignment over
     the fixed first-`n_cent`-vectors codebook. Shared by sim_ivf_topk
@@ -720,43 +714,22 @@ def ivf_assign_fixed(emb: DataFrame, n_probe: int = 1, n_cent: int = N_CENTROIDS
 
     # NOTE: constructing this DataFrame runs a Spark job (the bounded
     # codebook collect below) — even a plan-only build pays it once.
-    # Round 16 (r15 ADVICE): the collected arrays + broadcast are
-    # memoized per (application, embeddings plan, n_cent), so a sweep or
-    # a multi-key construct over the same corpus collects and broadcasts
-    # the ≤16 MB codebook ONCE per session instead of once per call
-    # (the old form leaked one broadcast per call).
-    spark = emb.sparkSession
-    try:
-        memo_key = (
-            spark.sparkContext.applicationId,
-            emb._jdf.queryExecution().analyzed().semanticHash(),  # noqa: SLF001
-            n_cent,
-        )
-    except Exception:
-        memo_key = None
-    bc = _CODEBOOK_CACHE.get(memo_key) if memo_key is not None else None
     out_schema = StructType(
         [StructField("vec_id", LongType()), StructField("cent_id", LongType())]
     )
-    if bc is None:
-        cent_rows = (
-            emb.filter(F.col("vec_id") < n_cent)
-            .select("vec_id", "embedding")
-            .collect()  # bounded: the codebook — the relation the old plan broadcast
-        )
-        cent_rows.sort(key=lambda r: r.vec_id)
-        if not cent_rows:
-            return emb.sparkSession.createDataFrame([], out_schema)
-        cent_ids = np.asarray([r.vec_id for r in cent_rows], dtype=np.int64)
-        cmat = np.asarray([r.embedding for r in cent_rows], dtype=np.float64)
-        cnrm = np.sqrt(_fold_dot(cmat, cmat))
-        bc = emb.sparkSession.sparkContext.broadcast((cent_ids, cmat, cnrm))
-        if memo_key is not None:
-            _CODEBOOK_CACHE[memo_key] = bc
-    k_n = len(bc.value[0])
-    if k_n == 0:
+    cent_rows = (
+        emb.filter(F.col("vec_id") < n_cent)
+        .select("vec_id", "embedding")
+        .collect()  # bounded: the codebook — the relation the old plan broadcast
+    )
+    cent_rows.sort(key=lambda r: r.vec_id)
+    if not cent_rows:
         return emb.sparkSession.createDataFrame([], out_schema)
-    p = min(n_probe, k_n)
+    cent_ids = np.asarray([r.vec_id for r in cent_rows], dtype=np.int64)
+    cmat = np.asarray([r.embedding for r in cent_rows], dtype=np.float64)
+    cnrm = np.sqrt(_fold_dot(cmat, cmat))
+    bc = emb.sparkSession.sparkContext.broadcast((cent_ids, cmat, cnrm))
+    p = min(n_probe, len(cent_ids))
 
     def kernel(batches):
         import numpy as np  # noqa: PLC0415 — executor-side import

@@ -27,7 +27,9 @@ BATCH_CONF = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     # Smallest partition AQE coalesces to (default 1MB): a ~1.5MB final
     # aggregate keeps a task per core; tiny tallies still merge into one.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64KB",
+    # 256KB, not 64KB: a 148KB shuffle also stays one task (PERF.md,
+    # "256KB coalescing floor": stage-task counts and a same-JVM A/B).
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "256KB",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
     # Arrow for any pandas_udf / mapInPandas path (the only sanctioned

@@ -11,18 +11,24 @@ near-dup gates keep a PERSISTED index that survivors' signatures join,
 so later arrivals dedup against everything admitted so far —
 first-arrival-wins across the whole stream, and the batch keys' exact
 verify rules are imported, not re-implemented, so 'near-dup' means one
-thing repo-wide. This module keeps the same source-agnostic contract as
-streaming/pipeline.py: the functions accept any streaming (or batch)
-DataFrame, so tests drive them from a file-backed stream and production
-points them at the Kafka/landing-zone source.
+thing repo-wide. The bottom-k sampler keeps its k winners per source
+in Spark's state store (applyInPandasWithState), so its exactly-once
+state is the checkpoint's own; read_bottomk_sample reads it back
+through the State Data Source. This module keeps the same
+source-agnostic contract as streaming/pipeline.py: the functions accept
+any streaming (or batch) DataFrame, so tests drive them from a
+file-backed stream and production points them at the Kafka/landing-zone
+source.
 """
 
 from __future__ import annotations
 
 import logging
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..functions import local_rows_df, normalize_text
 
@@ -1135,181 +1141,72 @@ class StreamingTables:
         self.documents = documents
 
 
-def _hadoop_path(spark, path: str):
-    return spark._jvm.org.apache.hadoop.fs.Path(path)
-
-
-def _latest_state_version(spark, state_path: str) -> int | None:
-    """Highest COMMITTED state version under ``state_path`` (a ``v{n}``
-    parquet dir carrying the _SUCCESS job-commit marker), or None when
-    no committed version exists. A partially-written version (crash
-    mid-write — no _SUCCESS) is invisible to readers, which is the
-    whole point of versioning the state instead of overwriting one dir
-    in place: parquet overwrite is delete-then-write, so in-place the
-    previous state is destroyed before the new one is durable."""
-    jvm = spark._jvm
-    fs = _hadoop_path(spark, state_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
+def read_bottomk_sample(spark, checkpoint_path: str) -> DataFrame:
+    """The sample kept by stream_sample_bottomk: its query's latest
+    committed state, read through the State Data Source as
+    ``(source, doc_id, h)``. Raises before the first committed batch."""
+    return spark.read.format("statestore").load(checkpoint_path).select(
+        F.col("key.source").alias("source"),
+        F.inline(
+            F.arrays_zip(
+                F.col("value.groupState.doc_ids").alias("doc_id"),
+                F.col("value.groupState.hs").alias("h"),
+            )
+        ),
     )
-    root = _hadoop_path(spark, state_path)
-    if not fs.exists(root):
-        return None
-    best = None
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith("v") and name[1:].isdigit():
-            if fs.exists(jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")):
-                n = int(name[1:])
-                if best is None or n > best:
-                    best = n
-    return best
 
 
-def _migrate_legacy_bottomk_state(spark, state_path: str) -> None:
-    """One-shot upgrade of a pre-versioning flat state layout (parquet
-    part files directly under ``state_path``) into ``v0/``. Without
-    this, a legacy state is invisible to _latest_state_version and the
-    accumulated sample silently restarts from empty on upgrade — the
-    exact failure mode the versioning was added to prevent (round-10
-    advice). Idempotent: a no-op once any committed v{n} exists. A
-    flat layout WITHOUT its job-commit marker is a crashed legacy
-    write nobody should trust — that raises instead of migrating."""
-    root = _hadoop_path(spark, state_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root) or _latest_state_version(spark, state_path) is not None:
-        return
-    flat = [st.getPath() for st in fs.listStatus(root) if st.isFile()]
-    names = {p.getName() for p in flat}
-    jvm0 = spark._jvm
-    v0_probe = jvm0.org.apache.hadoop.fs.Path(root, "v0")
-    if not any(n.startswith("part-") and ".parquet" in n for n in names):
-        # resume tail of a crashed migration: every part already moved,
-        # only the trailing _SUCCESS rename remains (it moves LAST, so
-        # an uncommitted v0 with a flat _SUCCESS is exactly this state)
-        if "_SUCCESS" in names and fs.exists(v0_probe):
-            fs.rename(
-                jvm0.org.apache.hadoop.fs.Path(root, "_SUCCESS"),
-                jvm0.org.apache.hadoop.fs.Path(v0_probe, "_SUCCESS"),
-            )
-            _LOG.warning(
-                "completed interrupted legacy state migration at %s", state_path
-            )
-        return  # otherwise: empty/new state dir — nothing legacy to migrate
-    if "_SUCCESS" not in names:
-        raise RuntimeError(
-            f"legacy (flat) sample state under {state_path} has no "
-            "_SUCCESS marker — a crashed pre-versioning write; refusing "
-            "to migrate or silently restart the sample"
+def _bottomk_merge(k: int):
+    def merge(key, batches, state):
+        parts = list(batches)
+        if state.exists:
+            doc_ids, hs = state.get
+            parts.append(pd.DataFrame({"doc_id": list(doc_ids), "h": list(hs)}))
+        top = (
+            pd.concat(parts)
+            .drop_duplicates("doc_id")  # a replayed or re-sent row adds nothing
+            .sort_values(["h", "doc_id"])
+            .head(k)
         )
-    jvm = spark._jvm
-    v0 = jvm.org.apache.hadoop.fs.Path(root, "v0")
-    fs.mkdirs(v0)
-    # crash ordering: data part files move FIRST, the _SUCCESS commit
-    # marker moves LAST (round-11 advice — listStatus order could move
-    # _SUCCESS early, and a crash mid-loop would leave v0 carrying the
-    # commit marker over partial data while the un-moved flat parts are
-    # never revisited: silent sample truncation). With _SUCCESS last, a
-    # crashed migration leaves v0 uncommitted — _latest_state_version
-    # ignores it and the re-run migrates the remainder (renames of
-    # already-moved names are skipped by the flat re-list).
-    for p in sorted(flat, key=lambda p: p.getName() == "_SUCCESS"):
-        if not fs.rename(p, jvm.org.apache.hadoop.fs.Path(v0, p.getName())):
-            raise RuntimeError(f"legacy state migration failed moving {p}")
-    _LOG.warning("migrated legacy flat sample state at %s to v0", state_path)
+        state.update((top["doc_id"].tolist(), top["h"].tolist()))
+        return iter(())
+
+    return merge
 
 
-def read_bottomk_sample(spark, state_path: str) -> DataFrame:
-    """The current sample maintained by stream_sample_bottomk: the
-    latest committed state version (a legacy flat layout is migrated
-    to v0 first). Raises if no committed version exists (the stream
-    has not completed a batch yet)."""
-    _migrate_legacy_bottomk_state(spark, state_path)
-    v = _latest_state_version(spark, state_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed sample state under {state_path}")
-    return spark.read.parquet(f"{state_path}/v{v}")
-
-
-def stream_sample_bottomk(
-    docs: DataFrame,
-    state_path: str,
-    checkpoint_path: str,
-    k: int | None = None,
-):
+def stream_sample_bottomk(docs: DataFrame, checkpoint_path: str, k: int | None = None):
     """STREAMING fixed-k stratified sampling — the online twin of
     operators/corpus.py::sample_fixed_k_stratified, same "fk:" salted
     md5, same per-source bottom-k rule. Bottom-k of a deterministic
     hash is a commutative, idempotent monoid (merge = set-union →
-    re-rank → cut), so the maintained sample is ORDER-INVARIANT: however
-    the stream interleaves arrivals, the final state equals the batch
-    key run over the union of everything seen — the reproducible-eval-
-    set property a 100 TB crawl needs from an online sampler (a classic
-    reservoir is RNG-order-dependent; this is not). The merge dedups on
-    (source, doc_id) before ranking, so a micro-batch REPLAYED under
-    foreachBatch's at-least-once contract (failure after the state write
-    but before the checkpoint commit) re-inserts nothing: without the
-    dedup a replayed winner would occupy two ranks and evict a
-    legitimate k-th member.
+    re-rank → cut), so the sample is ORDER-INVARIANT: however the
+    stream interleaves arrivals, it equals the batch key run over
+    everything seen (a classic reservoir is RNG-order-dependent; this
+    is not). The merge drops duplicate doc_ids before ranking, so rows
+    delivered again (a re-sent file, a replayed batch) insert nothing:
+    a winner cannot occupy two ranks and evict the k-th member.
 
-    State = the current winners only: ≤ k × |strata| rows of
-    (source, doc_id, h), written as VERSIONED parquet dirs
-    ``{state_path}/v{n}`` — each batch reads the latest committed
-    version (``_SUCCESS`` present) and writes version n+1, then prunes
-    older versions, so the previous state stays readable until the new
-    one is fully committed (an in-place overwrite is delete-then-write:
-    a crash mid-write would leave a partial dir a naive reader accepts
-    as the full sample). First-batch detection is explicit — no
-    committed version — so a corrupt state or transient FS error
-    propagates and Structured Streaming retries the batch instead of
-    silently restarting the sample from empty. Read the sample with
-    ``read_bottomk_sample`` (rank recomputable from h). Returns the
-    started StreamingQuery."""
+    State = per source, its ≤ k winners (doc_ids and hashes), kept by
+    ``applyInPandasWithState`` in Spark's state store: versioned and
+    committed with the checkpoint, so a restart resumes exactly. The
+    query writes to a ``noop`` sink; ``read_bottomk_sample`` reads the
+    sample. A checkpoint of the earlier ``foreachBatch`` sampler (``v{n}``
+    parquet dirs) cannot be resumed. Returns the started StreamingQuery."""
     from ..operators.corpus import SAMPLE_FIXED_K
 
-    if k is None:
-        k = SAMPLE_FIXED_K
-
-    def merge_batch(batch: DataFrame) -> None:
-        from pyspark.sql import Window
-
-        spark = batch.sparkSession
-        new = batch.select(
-            "source",
-            "doc_id",
-            F.md5(
-                F.concat_ws(
-                    ":", F.lit("fk"), F.col("doc_id").cast("string"), F.col("source")
-                )
-            ).alias("h"),
+    h = F.md5(F.concat_ws(":", F.lit("fk"), F.col("doc_id").cast("string"), "source"))
+    return (
+        docs.select("source", "doc_id", h.alias("h"))
+        .groupBy("source")
+        .applyInPandasWithState(
+            _bottomk_merge(SAMPLE_FIXED_K if k is None else k),
+            outputStructType="source string",
+            stateStructType="doc_ids array<bigint>, hs array<string>",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        _migrate_legacy_bottomk_state(spark, state_path)
-        latest = _latest_state_version(spark, state_path)
-        if latest is None:
-            merged = new
-        else:
-            prev = spark.read.parquet(f"{state_path}/v{latest}").select(
-                "source", "doc_id", "h"
-            )
-            merged = prev.unionByName(new)
-        rk = F.row_number().over(
-            Window.partitionBy("source").orderBy(F.col("h"), F.col("doc_id"))
-        )
-        out = (
-            merged.dropDuplicates(["source", "doc_id"])  # replay-idempotent merge
-            .withColumn("rk", rk)
-            .filter(F.col("rk") <= k)
-            .localCheckpoint(eager=True)  # materialize BEFORE any file mutation
-        )
-        nxt = 0 if latest is None else latest + 1
-        # overwrite is safe: v{nxt} is either absent or a partial dir
-        # from a crashed attempt that no reader trusts (no _SUCCESS)
-        out.write.mode("overwrite").parquet(f"{state_path}/v{nxt}")
-        fs = _hadoop_path(spark, state_path).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        for st in fs.listStatus(_hadoop_path(spark, state_path)):
-            name = st.getPath().getName()
-            if name.startswith("v") and name[1:].isdigit() and int(name[1:]) < nxt:
-                fs.delete(st.getPath(), True)
-
-    return _start_foreach_batch(docs, checkpoint_path, None, merge_batch)
+        .writeStream.format("noop")
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint_path)
+        .start()
+    )

@@ -123,6 +123,14 @@ def dedup_one_vote(events: DataFrame) -> DataFrame:
     main.py:55; insert-then-produce ordering voting.py:112-126) as
     streaming dedup on voter_id.
 
+    First arrival wins: of a voter's votes, the one that reaches the
+    stream first is kept, whatever its voting_time, as the reference's
+    UNIQUE keeps the first insert. A re-vote that arrives later with an
+    earlier voting_time is dropped (pinned by
+    test_live_tally_first_arrival_wins). Within one micro-batch "first"
+    is the order the dedup reads its input: source order for one file
+    or one Kafka partition, unspecified across files of one batch.
+
     No watermark: the state keeps one row per distinct voter for the
     life of the query, a re-vote any time later is suppressed, and a
     voter's first vote counts however late it arrives, as the

@@ -82,7 +82,7 @@ def test_get_spark_sets_streaming_checkpoint_defaults(spark, monkeypatch):
     assert got["spark.sql.streaming.checkpointFileManagerClass"] == manager
     assert got["spark.hadoop.fs.file.impl"] == "org.apache.hadoop.fs.RawLocalFileSystem"
     assert got.get("spark.sql.streaming.checkpoint.fileChecksum.enabled", "true") != "false"
-    assert got["spark.sql.adaptive.coalescePartitions.minPartitionSize"] == "64KB"
+    assert got["spark.sql.adaptive.coalescePartitions.minPartitionSize"] == "256KB"
     spark._jvm.java.lang.Class.forName(provider)
     spark._jvm.java.lang.Class.forName(manager)
     spark._jvm.java.lang.Class.forName(got["spark.hadoop.fs.file.impl"])
@@ -153,6 +153,21 @@ def test_package_reads_environment_only_in_session():
             )
             if name in ("environ", "getenv", "environb", "getenvb"):
                 offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert offenders == []
+
+
+def test_streaming_touches_no_py4j_internals():
+    """Streaming state lives in Spark's state store, or in parquet that
+    DataFrame writers write; no module under ``streaming/`` reaches
+    into the JVM through ``spark._jvm`` or ``spark._jsc`` (a hand-rolled
+    Hadoop FileSystem store, say)."""
+    pkg = REPO / "realtimevotingdataengineer_spark" / "streaming"
+    offenders = [
+        f"{path.name}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr in ("_jvm", "_jsc")
+    ]
     assert offenders == []
 
 

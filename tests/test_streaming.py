@@ -241,8 +241,8 @@ def test_backpressure_bounded_batches(spark, tmp_path):
 _T0 = 1_700_000_000  # epoch s of the first vote
 
 
-def _vote_line(voter: int, at: int) -> str:
-    cand = voter % 3
+def _vote_line(voter: int, at: int, cand: int | None = None) -> str:
+    cand = voter % 3 if cand is None else cand
     return json.dumps(
         {
             "voter_id": f"voter-{voter}",
@@ -345,6 +345,59 @@ def test_live_tally_restarts_from_changelog_checkpoints(spark, tmp_path):
     batches = [f for f in (ckpt / "commits").iterdir() if f.name.isdigit()]
     assert len(batches) >= n_files
     assert forks <= 40 * len(batches), f"{forks} forks over {len(batches)} batches"
+
+    # the committed state itself, read through the State Data Source
+    ops = {
+        r.operatorName: r.operatorId
+        for r in spark.read.format("state-metadata").load(str(ckpt)).collect()
+    }
+    assert {"dedupe", "stateStoreSave"} <= ops.keys()
+
+    def state(op: str):
+        return (
+            spark.read.format("statestore")
+            .option("operatorId", ops[op])
+            .load(str(ckpt))
+        )
+
+    # one row per voter: re-sends and malformed lines add none
+    assert state("dedupe").count() == len(voters)
+    tally = state("stateStoreSave").select("key.candidate_id", "value.sum").collect()
+    assert len(tally) == len(want)
+    assert {r.candidate_id: r.sum for r in tally} == want
+
+
+def test_live_tally_first_arrival_wins(spark, tmp_path):
+    """The one-vote rule keeps a voter's first-ARRIVING vote, not the
+    earliest-timestamped one, as the reference's UNIQUE(voter_id) keeps
+    the first insert. Voter X votes cand-1 in file a, then cand-2 five
+    minutes EARLIER in event time in file b, one micro-batch per file:
+    the tally counts cand-1 once and cand-2 never. Under earliest-wins,
+    the rule of the batch twin relational.stream_dedup_one_vote, it
+    would count cand-2."""
+    src = tmp_path / "votes"
+    src.mkdir()
+    raw = pipeline.read_text_stream(spark, str(src), max_files_per_trigger=1)
+    tally = pipeline.tally_per_candidate(
+        pipeline.dedup_one_vote(pipeline.parse_vote_events(raw))
+    )
+    q = sinks.write_memory(tally, "first_arrival_tally", "update")
+    try:
+        for name, at, cand in [("a", 300, 1), ("b", 0, 2)]:
+            _write_vote_file(src / f"votes-{name}.jsonl", [_vote_line(7, at, cand)])
+            q.processAllAvailable()
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+    assert len(batches) == 2
+    got = {
+        r.candidate_id: r.t
+        for r in spark.sql(
+            "SELECT candidate_id, max(total_votes) AS t FROM first_arrival_tally "
+            "GROUP BY candidate_id"
+        ).collect()
+    }
+    assert got == {"cand-1": 1}
 
 
 def test_dedup_state_outlives_the_watermark(spark, tmp_path):
@@ -796,13 +849,11 @@ def test_stream_sample_bottomk_equals_batch_any_order(spark, sf_dir, tmp_path):
     for order, tag in [(range(3), "fwd"), (reversed(range(3)), "rev")]:
         stream_dir = tmp_path / f"in_{tag}"
         stream_dir.mkdir()
-        state = str(tmp_path / f"state_{tag}")
+        ck = str(tmp_path / f"ck_{tag}")
         sdocs = spark.readStream.schema("doc_id bigint, source string").parquet(
             str(stream_dir) + "/*"
         )
-        q = corpus.stream_sample_bottomk(
-            sdocs, state, str(tmp_path / f"ck_{tag}")
-        )
+        q = corpus.stream_sample_bottomk(sdocs, ck)
         for n, i in enumerate(order):
             docs.filter(
                 (F.col("doc_id") >= cuts[i]) & (F.col("doc_id") < cuts[i + 1])
@@ -811,7 +862,7 @@ def test_stream_sample_bottomk_equals_batch_any_order(spark, sf_dir, tmp_path):
         q.stop()
         got = {
             (r.source, r.doc_id)
-            for r in corpus.read_bottomk_sample(spark, state).collect()
+            for r in corpus.read_bottomk_sample(spark, ck).collect()
         }
         assert got == want, tag
 
@@ -873,12 +924,13 @@ def test_stream_gates_survive_restart(spark, sf_dir, tmp_path):
     """Recovery evidence: stop the query between micro-batches and start
     a NEW query on the same checkpoint + state paths. Both stateful
     streaming surfaces must come back exactly: (a) stream_sample_bottomk
-    resumes from its winners parquet and still equals the batch key;
+    resumes from its winners in the state store and still equals the
+    batch key;
     (b) stream_dedup_minhash resumes against the survivor-extended index
     and still equals the single-run greedy — the restart inserts no
     duplicates and drops no survivors (checkpoint offsets skip the
-    processed batch; state lives in the index/state parquet, not the
-    dead query)."""
+    processed batch; state lives in the state store or the index
+    parquet, not the dead query)."""
     from pyspark.sql import functions as F
 
     import realtimevotingdataengineer_spark.operators  # noqa: F401
@@ -893,11 +945,11 @@ def test_stream_gates_survive_restart(spark, sf_dir, tmp_path):
     mx = docs.agg(F.max("doc_id")).collect()[0][0]
     stream_dir = tmp_path / "in"
     stream_dir.mkdir()
-    state, ck = str(tmp_path / "state"), str(tmp_path / "ck")
+    ck = str(tmp_path / "ck")
     sdocs = spark.readStream.schema("doc_id bigint, source string").parquet(
         str(stream_dir) + "/*"
     )
-    q = corpus.stream_sample_bottomk(sdocs, state, ck)
+    q = corpus.stream_sample_bottomk(sdocs, ck)
     docs.filter(F.col("doc_id") < (mx + 1) // 2).coalesce(1).write.parquet(
         str(stream_dir / "b0")
     )
@@ -907,7 +959,7 @@ def test_stream_gates_survive_restart(spark, sf_dir, tmp_path):
     sdocs2 = spark.readStream.schema("doc_id bigint, source string").parquet(
         str(stream_dir) + "/*"
     )
-    q2 = corpus.stream_sample_bottomk(sdocs2, state, ck)
+    q2 = corpus.stream_sample_bottomk(sdocs2, ck)
     docs.filter(F.col("doc_id") >= (mx + 1) // 2).coalesce(1).write.parquet(
         str(stream_dir / "b1")
     )
@@ -915,7 +967,7 @@ def test_stream_gates_survive_restart(spark, sf_dir, tmp_path):
     q2.stop()
     got = {
         (r.source, r.doc_id)
-        for r in corpus.read_bottomk_sample(spark, state).collect()
+        for r in corpus.read_bottomk_sample(spark, ck).collect()
     }
     want = {
         (r.source, r.doc_id)
@@ -1226,17 +1278,16 @@ def test_srp_gate_replay_self_healing(spark, sf_dir, tmp_path):
 
 def test_stream_sample_bottomk_duplicate_redelivery(spark, sf_dir, tmp_path):
     """At-least-once redelivery: the SAME rows arriving again in a later
-    micro-batch (source-level duplicate delivery, or a replayed batch
-    whose state write already landed) must leave the sample unchanged —
-    the merge is a SET union on (source, doc_id), so a winner cannot
-    occupy two ranks and evict a legitimate k-th member. Also pins the
-    versioned-state contract: exactly one committed version dir remains
-    after pruning, and the sample has no duplicate rows."""
-    import os
-
+    micro-batch (source-level duplicate delivery, or a replayed batch)
+    must leave the sample unchanged — the merge drops duplicate doc_ids,
+    so a winner cannot occupy two ranks and evict a legitimate k-th
+    member. Also pins where the state lives: the checkpoint's state
+    store has one operator, and every source's state holds at most k
+    distinct winners, so the sample has no duplicate rows."""
     from pyspark.sql import functions as F
 
     import realtimevotingdataengineer_spark.operators  # noqa: F401
+    from realtimevotingdataengineer_spark.operators.corpus import SAMPLE_FIXED_K
     from realtimevotingdataengineer_spark.registry import QUERIES
     from realtimevotingdataengineer_spark.sources.tables import Tables, load_table
     from realtimevotingdataengineer_spark.streaming import corpus
@@ -1245,18 +1296,18 @@ def test_stream_sample_bottomk_duplicate_redelivery(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     stream_dir = tmp_path / "in"
     stream_dir.mkdir()
-    state = str(tmp_path / "state")
+    ck = str(tmp_path / "ck")
     sdocs = spark.readStream.schema("doc_id bigint, source string").parquet(
         str(stream_dir) + "/*"
     )
-    q = corpus.stream_sample_bottomk(sdocs, state, str(tmp_path / "ck"))
+    q = corpus.stream_sample_bottomk(sdocs, ck)
     for name in ("b0", "b1_same_rows_again"):
         docs.coalesce(1).write.parquet(str(stream_dir / name))
         q.processAllAvailable()
     q.stop()
     got = [
         (r.source, r.doc_id)
-        for r in corpus.read_bottomk_sample(spark, state).collect()
+        for r in corpus.read_bottomk_sample(spark, ck).collect()
     ]
     want = {
         (r.source, r.doc_id)
@@ -1264,8 +1315,13 @@ def test_stream_sample_bottomk_duplicate_redelivery(spark, sf_dir, tmp_path):
     }
     assert len(got) == len(set(got))  # no duplicate winners
     assert set(got) == want
-    versions = [d for d in os.listdir(state) if d.startswith("v")]
-    assert len(versions) == 1  # older versions pruned after commit
+    assert spark.read.format("state-metadata").load(ck).count() == 1
+    states = spark.read.format("statestore").load(ck).select(
+        F.col("key.source").alias("source"),
+        F.col("value.groupState.doc_ids").alias("doc_ids"),
+    ).collect()
+    assert len({r.source for r in states}) == len(states)  # one state per source
+    assert all(len(set(r.doc_ids)) == len(r.doc_ids) <= SAMPLE_FIXED_K for r in states)
 
 
 def test_srp_caps_none_bit_identical_and_widen_metric(spark, sf_dir):
@@ -1350,142 +1406,6 @@ def test_srp_caps_none_bit_identical_and_widen_metric(spark, sf_dir):
         assert corpus.SRP_WIDEN_LAST["self"] == {"buckets": 0, "rows": 0}
     finally:
         logger.removeHandler(h)
-
-
-def test_bottomk_legacy_flat_state_migrates_to_v0(spark, sf_dir, tmp_path):
-    """Round-10 advice: a pre-versioning FLAT state layout (parquet
-    part files directly under state_path) must migrate to v0 and keep
-    accumulating — not silently restart the sample from empty. A
-    crashed legacy write (no _SUCCESS) must raise, not migrate."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from realtimevotingdataengineer_spark.sources.tables import load_table
-    from realtimevotingdataengineer_spark.streaming import corpus
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    mx = docs.agg(F.max("doc_id")).collect()[0][0]
-    half = (mx + 1) // 2
-    state = str(tmp_path / "state")
-    # legacy writer: the pre-versioning layout was a plain overwrite
-    # parquet dir of (source, doc_id, h)
-    legacy = docs.filter(F.col("doc_id") < half).select(
-        "source",
-        "doc_id",
-        F.md5(
-            F.concat_ws(":", F.lit("fk"), F.col("doc_id").cast("string"), "source")
-        ).alias("h"),
-    )
-    legacy.write.parquet(state)
-    legacy_set = {(r.source, r.doc_id) for r in legacy.collect()}
-
-    # read path migrates and serves the legacy winners (k-cut applies)
-    got = {
-        (r.source, r.doc_id)
-        for r in corpus.read_bottomk_sample(spark, state).collect()
-    }
-    assert got <= legacy_set and got
-    assert os.path.isdir(os.path.join(state, "v0"))
-
-    # and a subsequent stream batch MERGES onto it (no restart): run the
-    # second half through the stream and compare with the batch sample
-    # over the full corpus
-    stream_dir = tmp_path / "in"
-    stream_dir.mkdir()
-    sdocs = spark.readStream.schema("doc_id bigint, source string").parquet(
-        str(stream_dir) + "/*"
-    )
-    q = corpus.stream_sample_bottomk(sdocs, state, str(tmp_path / "ck"))
-    docs.filter(F.col("doc_id") >= half).coalesce(1).write.parquet(
-        str(stream_dir / "b0")
-    )
-    q.processAllAvailable()
-    q.stop()
-    import realtimevotingdataengineer_spark.operators  # noqa: F401
-    from realtimevotingdataengineer_spark.registry import QUERIES
-    from realtimevotingdataengineer_spark.sources.tables import Tables
-
-    want = {
-        (r.source, r.doc_id)
-        for r in QUERIES["sample_fixed_k_stratified"](Tables(spark, sf_dir)).collect()
-    }
-    merged = {
-        (r.source, r.doc_id)
-        for r in corpus.read_bottomk_sample(spark, state).collect()
-    }
-    assert merged == want
-
-    # crashed legacy write: flat files, no _SUCCESS -> explicit error
-    state2 = str(tmp_path / "state2")
-    legacy.write.parquet(state2)
-    os.remove(os.path.join(state2, "_SUCCESS"))
-    with pytest.raises(RuntimeError, match="_SUCCESS"):
-        corpus.read_bottomk_sample(spark, state2)
-
-
-def test_bottomk_migration_crash_resume_commits_success_last(
-    spark, sf_dir, tmp_path
-):
-    """Round-11 advice: the legacy→v0 migration must move data part
-    files FIRST and the _SUCCESS marker LAST, so a crash mid-migration
-    leaves v0 UNCOMMITTED (invisible to _latest_state_version) and the
-    re-run finishes the move — never a committed v0 over partial data.
-    Simulates the worst crash points by hand-arranging the dir."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from realtimevotingdataengineer_spark.sources.tables import load_table
-    from realtimevotingdataengineer_spark.streaming import corpus
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    legacy = docs.select(
-        "source",
-        "doc_id",
-        F.md5(
-            F.concat_ws(":", F.lit("fk"), F.col("doc_id").cast("string"), "source")
-        ).alias("h"),
-    ).repartition(4)
-    legacy_set = {(r.source, r.doc_id) for r in legacy.collect()}
-
-    def crash_state(name, move_parts, move_success):
-        state = str(tmp_path / name)
-        legacy.write.parquet(state)
-        parts = sorted(
-            f for f in os.listdir(state) if f.startswith("part-")
-        )
-        os.makedirs(os.path.join(state, "v0"), exist_ok=True)
-        for f in parts[:move_parts]:
-            shutil.move(os.path.join(state, f), os.path.join(state, "v0", f))
-        if move_success:
-            shutil.move(
-                os.path.join(state, "_SUCCESS"),
-                os.path.join(state, "v0", "_SUCCESS"),
-            )
-        return state
-
-    # crash mid-parts: v0 has some parts, no _SUCCESS anywhere in v0
-    st = crash_state("mid", move_parts=2, move_success=False)
-    assert corpus._latest_state_version(spark, st) is None  # uncommitted
-    got = {
-        (r.source, r.doc_id)
-        for r in corpus.read_bottomk_sample(spark, st).collect()
-    }
-    assert got and got <= legacy_set
-    assert os.path.exists(os.path.join(st, "v0", "_SUCCESS"))
-    assert corpus._latest_state_version(spark, st) == 0
-
-    # crash after the last part, before the marker: only _SUCCESS flat
-    st2 = crash_state("tail", move_parts=4, move_success=False)
-    got2 = {
-        (r.source, r.doc_id)
-        for r in corpus.read_bottomk_sample(spark, st2).collect()
-    }
-    assert got2 == got
-    assert corpus._latest_state_version(spark, st2) == 0
 
 
 def _gate_specs(corpus):
